@@ -54,6 +54,9 @@ object Bench {
         case c if c < ' ' => f"\\u${c.toInt}%04x"
         case c    => c.toString
       } + "\""
+    // a failure's cause as it lands in the bench record
+    def describe(e: Throwable): String =
+      jsonStr(s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}")
     val wt0 = System.nanoTime()
     storeOwners.foreach(n => SparkEntry.queries.get(n).foreach(fn =>
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -62,7 +65,7 @@ object Bench {
           // a failed warm-up means that family's first timed cell pays
           // training again — the exact skew this pass exists to remove —
           // so the failure must be loud in the bench record, not silent
-          println(s"""{"metric":"stored_warmup_failed","query":"$n","error":${jsonStr(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")}}""")
+          println(s"""{"metric":"stored_warmup_failed","query":"$n","error":${describe(e)}}""")
       }))
     println(s"""{"metric":"stored_warmup","value":${(System.nanoTime() - wt0) / 1e9},"unit":"sec"}""")
 
@@ -105,11 +108,13 @@ object Bench {
         }
       })
 
-    // a crashing query must NOT look like a fast success: it reports -1
-    // and lands in the "failed" list
-    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    // a crashing query must NOT look like a fast success: it reports -1,
+    // lands in the "failed" list, and its first exception's class and
+    // message land in "errors"
+    val errors = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       var lastShuffle = -1L
+      var error: Option[String] = None
       val times = (1 to repeat).map { _ =>
         scrub()
         val s0 = shuffleWrite.get()
@@ -124,16 +129,22 @@ object Bench {
                                     cur = shuffleWrite.get() }
               lastShuffle = cur - s0
               dt }
-        catch { case _: Throwable => -1.0 }
+        catch { case e: Throwable =>
+          if (error.isEmpty) error = Some(describe(e))
+          -1.0 }
       }
-      if (times.contains(-1.0)) { failed += name; (name, -1.0, -1L) }
-      else (name, times.min, lastShuffle)
+      error match {
+        case Some(e) => errors += name -> e; (name, -1.0, -1L)
+        case None    => (name, times.min, lastShuffle)
+      }
     }
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val sh = results.map { case (k, _, b) => "\"" + k + "\":" + b }
       .mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = errors.map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    val errorsJson = errors.map { case (k, e) => "\"" + k + "\":" + e }
+      .mkString("{", ",", "}")
     val total = results.filter(_._2 >= 0).map(_._2).sum
     // shuffle map on its OWN earlier line: the driver keeps the TAIL of
     // stdout, and r6's combined line was truncated mid-shuffle_bytes,
@@ -141,7 +152,7 @@ object Bench {
     // tail cut can only cost the (separately printed) shuffle map.
     println(s"""{"metric":"shuffle_bytes","unit":"bytes","shuffle_bytes":$sh}""")
     val metric =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","failed":$failedJson,"queries":$qs}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","failed":$failedJson,"errors":$errorsJson,"queries":$qs}"""
     println(metric)
     // FINAL line is a compact, self-contained record that survives any
     // tail truncation (r10's round artifact kept a 63-query mid-line
@@ -176,7 +187,7 @@ object Bench {
           }.getOrElse("")
         } catch { case _: Exception => "" }
       } else ""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"failed":$failedJson$floorFields,"heaviest":$heaviest,"full_record":"bench/latest_full.json"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"failed":$failedJson,"errors":$errorsJson$floorFields,"heaviest":$heaviest,"full_record":"bench/latest_full.json"}""")
     // ALSO persist the complete record in-repo: the driver keeps only a
     // 2,000-char stdout tail and the full queries map is ~4.5 KB, which
     // has twice cost a round its per-query history (VERDICT r7 #3).
@@ -202,7 +213,7 @@ object Bench {
       // bytes together — json.load'able without line splitting
       if (fname == "latest.json")
         java.nio.file.Files.writeString(dir.resolve("latest_full.json"),
-          s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"failed":$failedJson,"queries":$qs,"shuffle_bytes":$sh}""" + "\n")
+          s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"failed":$failedJson,"errors":$errorsJson,"queries":$qs,"shuffle_bytes":$sh}""" + "\n")
     } catch { case e: Exception =>
       System.err.println(s"[bench] could not write bench/$fname: $e")
     }

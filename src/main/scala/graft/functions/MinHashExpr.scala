@@ -35,6 +35,8 @@ case class MinHashHex(child: Expression, k: Int)
   require(k >= 1 && k <= 64, s"k must be in 1..64, got $k")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  // doGenCode assigns ev.isNull, which nullSafeCodeGen only declares for
+  // a nullable expression (an empty shingle array evaluates to null)
   override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -91,6 +93,7 @@ case class MinHashHex(child: Expression, k: Int)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     // instance state (the k slot prefixes) rides in as a reference
     // object; the generated call stays one virtual dispatch per row
+    assert(nullable, "the generated code assigns ev.isNull")
     val ref = ctx.addReferenceObj("minHashHex", this, classOf[MinHashHex].getName)
     nullSafeCodeGen(ctx, ev, c => s"""
       ${ev.value} = $ref.evalShingles($c);

@@ -42,6 +42,48 @@ object StacCrawler {
     * STAC catalogs — the reference's whole crawl fits one Lambda —
     * while bounding what a crawler-trap graph can cost the driver. */
   val DefaultMaxDocs: Int = 100000
+
+  /** An href resolved against the URL of the document holding it
+    * (O-15, utils.py:43-48): an `s3://` href as is, a relative one
+    * against the parent's directory. Dot segments are then removed
+    * (RFC 3986 §5.2.4), so `../catalog.json` from a nested item names
+    * the same URL the catalog was visited under and the cycle guard
+    * holds; the scheme, bucket, query and fragment are kept as they
+    * are. */
+  def resolve(href: String, parentUrl: String): String = {
+    val url =
+      if (href.startsWith("s3://")) href
+      else s"${parentUrl.substring(0, parentUrl.lastIndexOf('/'))}/$href"
+    val from = url.indexOf('/', "s3://".length)
+    if (from < 0) url
+    else {
+      val to = url.indexWhere(c => c == '?' || c == '#', from) match {
+        case -1 => url.length
+        case i  => i
+      }
+      url.substring(0, from) + removeDotSegments(url.substring(from, to)) +
+        url.substring(to)
+    }
+  }
+
+  /** RFC 3986 §5.2.4 over an absolute path, as a segment stack: `.`
+    * drops, `..` pops its parent (never above the root), and a
+    * trailing `.`/`..` leaves the path ending in `/`. */
+  private[gdl] def removeDotSegments(path: String): String = {
+    val segs = path.split("/", -1).drop(1)
+    val out = mutable.ArrayBuffer.empty[String]
+    segs.iterator.zipWithIndex.foreach { case (seg, i) =>
+      val last = i == segs.length - 1
+      seg match {
+        case "."  => if (last) out += ""
+        case ".." =>
+          if (out.nonEmpty) out.remove(out.size - 1)
+          if (last) out += ""
+        case _    => out += seg
+      }
+    }
+    out.mkString("/", "/", "")
+  }
 }
 
 class StacCrawler(reader: UrlReader,
@@ -68,9 +110,7 @@ class StacCrawler(reader: UrlReader,
       return CrawlOutput(Nil, Nil, validations.toSeq, aborted = true)
     }
 
-    def resolve(href: String, parentUrl: String): String = // O-15, utils.py:43-48
-      if (href.startsWith("s3://")) href
-      else s"${parentUrl.substring(0, parentUrl.lastIndexOf('/'))}/$href"
+    import StacCrawler.resolve
 
     def getObject(url: String): JsonNode = { // utils.py:132-152
       val text =

@@ -143,16 +143,15 @@ object StoreStress {
 
     // Contended readers during pointer flips: 4 reader threads loop
     // read().count() while one writer interleaves appends, folds and
-    // compactions (pointer-commit mode; gc grace at its default — the
-    // grace period IS the contract that lets in-flight readers keep
-    // resolving, so zero-grace concurrent reads are out of contract).
+    // compactions (gc grace at its default — the grace period IS the
+    // contract that lets in-flight readers keep resolving, so
+    // zero-grace concurrent reads are out of contract).
     // Invariants: no reader ever throws, and every observed count is
     // monotone non-decreasing per reader (append-only table ⇒ every
     // committed snapshot's count grows; a dip would mean a read
     // resolved a half-superseded chain).
     val flip = new TableStore(spark, s"$work/flip",
-      partitioning = Map.empty, bloomColumns = Map.empty,
-      pointerCommits = true)
+      partitioning = Map.empty, bloomColumns = Map.empty)
     flip.append("t", Seq(0L).toDF("v"))
     timed("contended readers during pointer flips") {
       val stop = new java.util.concurrent.atomic.AtomicBoolean(false)

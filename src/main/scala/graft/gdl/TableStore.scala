@@ -9,21 +9,23 @@ import org.apache.spark.sql.functions.{col, desc, row_number}
   * (infrastructure/storage_stack.py:62-95) in an offline build without a
   * table format like Delta/Iceberg.
   *
-  * Layout per table: `root/<table>/g<seq>-<full|delta>/part-*.parquet`.
-  * Readers union the newest `full` generation with every later `delta`.
-  * A commit writes to a `_tmp-` dir first and renames it into place —
-  * rename is atomic on HDFS/local fs, which gives single-writer
-  * atomicity (the reference's count-then-insert title check is likewise
-  * unserialized, backend/datasets/create.py:32-39).
+  * Layout per table: data dirs `root/<table>/_data-<uuid>/part-*.parquet`
+  * and one pointer file per generation, `root/<table>/_commits/g<seq>`,
+  * whose content is `<kind>\n<data dir name>`. Readers list the pointers
+  * and union the newest `full` generation with every later `delta`.
   *
-  * Object stores (rename = copy-then-delete, not atomic): construct
-  * with `pointerCommits = true` and the publish step becomes ONE
-  * create-exclusive write of a tiny `_commits/g<seq>` pointer file
-  * naming the in-place staged `_data-<uuid>` dir — the semantic an S3
-  * conditional PUT (If-None-Match: *) provides. The pointer name is
-  * the slot lock, so same-seq ties are structurally impossible in this
-  * mode. TableStorePointerSpec drives the whole protocol on a
-  * filesystem whose publish-level rename throws.
+  * Commit protocol (one, on every filesystem): stage the data dir, its
+  * stats and its tombstones in place, then publish with ONE
+  * create-exclusive write of the pointer for the next seq — the
+  * semantic an S3 conditional PUT (If-None-Match: *) provides and
+  * HDFS/local `create(overwrite = false)` provides natively. Invariants:
+  *  - the pointer name is the slot lock: exactly one writer owns each
+  *    seq, so two generations never share a slot;
+  *  - a generation is visible iff its pointer reads complete; a staged
+  *    data dir no pointer names is invisible (and reclaimed by [[gc]]);
+  *  - no publish step renames, so the protocol holds on object stores
+  *    (TableStorePointerSpec drives it on a filesystem whose
+  *    publish-level rename throws).
   *
   * Scale: appends (the hot path — validation/asset rows) are pure file
   * additions, no read-modify-write; only the small catalog table pays
@@ -35,36 +37,23 @@ import org.apache.spark.sql.functions.{col, desc, row_number}
   * Retention: superseded generations are NOT deleted at commit time —
   * a concurrent reader (or a retained lazy DataFrame re-evaluated across
   * several actions) may still hold their file paths. They are GC'd only
-  * once older than `gcGraceMs` (checked on later commits or an explicit
-  * [[gc]]), the same grace-period discipline Delta/Iceberg use for
-  * vacuum. Delta count per table is bounded: an append that leaves more
-  * than `autoCompactDeltas` deltas since the last full generation folds
-  * them into a new full generation, so read-time file listings stay O(1)
-  * amortized no matter how many appends a table sees.
+  * once the generation superseding them is older than `gcGraceMs`
+  * (checked on later commits or an explicit [[gc]]), the same
+  * grace-period discipline Delta/Iceberg use for vacuum. Delta count per
+  * table is bounded: an append that leaves more than `autoCompactDeltas`
+  * deltas since the last full generation folds them into one
+  * generation, so read-time file listings stay O(1) amortized no matter
+  * how many appends a table sees.
   *
-  * Slot ties: the atomic rename claims a NAME, so two writers CAN
-  * land the same sequence under different kinds (g5-delta vs g5-comp).
-  * Readers resolve every tie deterministically — snapshot-guarded
-  * kinds (comp/fold/merge) rank after the free kinds (delta/full),
-  * then by name — the losing committer detects the tie post-claim and
-  * withdraws (snapshot writers return false and re-run on a fresh
-  * snapshot that includes the rival; free writers pull their staged
-  * dir back and retry the next slot), and gc reclaims losers that
-  * crashed mid-withdrawal once past the grace period. The rule's
-  * direction matters: a maintenance rewrite losing a tie costs a
-  * re-snapshot, while an append losing one would make committed rows
-  * transiently vanish — so data-bearing kinds always win.
-  *
-  * Compaction concurrency: compact() snapshots the live generations,
-  * writes them as one full generation, and claims EXACTLY the next
-  * sequence slot after the snapshot via the atomic rename. If any other
-  * writer committed in between, the expected slot is taken (or the
-  * re-listed next slot has moved past it), the staged full generation is
-  * discarded and compaction retries with a fresh snapshot — so a delta
-  * committed concurrently can never land BELOW the full generation that
-  * didn't include it (which would hide it from read() and let gc delete
-  * it). This is the same optimistic detect-conflict-and-retry protocol
-  * log-structured table formats use for RewriteFiles vs Append commits.
+  * Snapshot writers (compact, fold, merge, delete, clustered rewrite)
+  * claim EXACTLY the slot after the snapshot they read. If any other
+  * writer committed in between, that slot is taken, the staged
+  * generation is discarded and the writer retries on a fresh snapshot —
+  * so a delta committed concurrently can never land BELOW a generation
+  * that superseded the table without it (which would hide it from
+  * read() and let gc delete it). This is the optimistic
+  * detect-conflict-and-retry protocol log-structured table formats use
+  * for RewriteFiles vs Append commits.
   *
   * @param autoCompactDeltas compact when an append leaves more than this
   *                          many deltas since the last full generation
@@ -107,8 +96,7 @@ class TableStore(spark: SparkSession, root: String,
                  gcGraceMs: Long = 10L * 60 * 1000,
                  partitioning: Map[String, Seq[String]] = TableStore.defaultPartitioning,
                  bloomColumns: Map[String, Seq[String]] = TableStore.defaultBloomColumns,
-                 bloomBitsPerFile: Int = 1 << 25,
-                 pointerCommits: Boolean = false) {
+                 bloomBitsPerFile: Int = 1 << 25) {
   require(bloomBitsPerFile > 0, "bloomBitsPerFile must be positive")
 
   private def layout(table: String): Seq[String] =
@@ -133,27 +121,22 @@ class TableStore(spark: SparkSession, root: String,
 
   private def tableDir(table: String) = new Path(root, table)
 
-  // ---- pointer-commit mode ------------------------------------------
-  // On object stores rename is copy-then-delete — neither atomic nor
-  // cheap — so the rename-claimed slot protocol breaks. With
-  // `pointerCommits` the PUBLISH step is instead one create-EXCLUSIVE
-  // write of a tiny pointer file `_commits/g<seq>` whose content names
-  // the staged data dir (`_data-<uuid>`, written in place, never
-  // renamed at the publish level). The pointer name IS the slot lock:
-  // same-seq ties are impossible (exactly one creator wins), so the
-  // rival-rank/withdraw machinery of the rename path is not needed.
-  // This is precisely the semantic S3 conditional PUT
-  // (If-None-Match: *) provides; HDFS/local create(overwrite=false)
-  // provides it natively. Data staging may still rename INTERNALLY
-  // (task committers inside the staged dir) — production S3 uses a
-  // rename-free committer there; the protocol's correctness only
-  // needs the publish step, which TableStorePointerSpec proves on a
-  // filesystem whose publish-level rename throws.
+  // ---- commit pointers ---------------------------------------------
+  // Data staging may rename INSIDE a staged dir (Spark's task committer,
+  // the stats files of writeStats); production object stores use a
+  // rename-free committer there. Publishing never renames.
 
   private def commitsDir(table: String) = new Path(tableDir(table), "_commits")
 
   private def pointerPath(table: String, seq: Long) =
     new Path(commitsDir(table), f"g$seq%07d")
+
+  /** The seq a pointer-shaped name `g<digits>` stands for; None for any
+    * other name in `_commits/` (provably not a commit marker). */
+  private def pointerSeq(name: String): Option[Long] =
+    if (name.length > 1 && name.startsWith("g") &&
+        name.drop(1).forall(_.isDigit)) Some(name.drop(1).toLong)
+    else None
 
   /** Pointer files are immutable once created — cache forever. Safe
     * because a pointer PATH is never reused with different content:
@@ -167,7 +150,8 @@ class TableStore(spark: SparkSession, root: String,
 
   /** The four observable states of a pointer file. The distinction that
     * matters for safety: [[PointerTorn]] (content read fine but is
-    * malformed — a crashed writer's torn emulation-mode write) is the
+    * malformed — a crashed writer's torn write on a filesystem where
+    * create, write and close are separate steps) is the
     * ONLY reclaimable state, and only once aged past the gc grace.
     * [[PointerUnreadable]] (the read itself failed after retries)
     * proves nothing — the pointer may be a fully COMMITTED rival whose
@@ -183,10 +167,10 @@ class TableStore(spark: SparkSession, root: String,
   /** Read a pointer file, distinguishing torn content from a failed
     * read. Transient IO errors are retried with bounded EXPONENTIAL
     * backoff + jitter (2·2^k ms ± jitter, 4 tries ≈ ≤ 40 ms total):
-    * this sits on the driver's read path under contention, where the
-    * old fixed 5·k ms ladder synchronized colliding readers into
-    * retry convoys — jitter decorrelates them, and the cap keeps a
-    * persistent fault's worst case under one scheduler tick. */
+    * this sits on the driver's read path under contention, where a
+    * fixed ladder synchronizes colliding readers into retry convoys —
+    * jitter decorrelates them, and the cap keeps a persistent fault's
+    * worst case under one scheduler tick. */
   private def readPointerState(f: FileSystem, p: Path): PointerRead = {
     val k = p.toString
     val cached = pointerCache.get(k)
@@ -227,20 +211,12 @@ class TableStore(spark: SparkSession, root: String,
     * snapshot taken without the hidden rows that then outranks them
     * turns a transient read fault into permanent row loss the moment
     * the fault heals. Mirrors the orphan-`_data-` sweep gate in
-    * [[gc]]. Torn/gone pointers are fine (provably not commits);
-    * rename mode has no pointers, so the gate trivially passes. */
+    * [[gc]]. Torn/gone pointers are fine (provably not commits). */
   private def unreadableAtOrBelow(table: String, tail: Long): Boolean = {
-    if (!pointerCommits) return false
     val cd = commitsDir(table)
     val f = fs(cd)
     f.exists(cd) && f.listStatus(cd).exists { s =>
-      val nm = s.getPath.getName
-      // nm must carry a NON-EMPTY digit suffix: a file named exactly
-      // "g" passes forall on the empty string and then "".toLong
-      // throws, crashing the sweep this gate protects
-      s.isFile && nm.length > 1 && nm.startsWith("g") &&
-        nm.stripPrefix("g").forall(_.isDigit) &&
-        nm.stripPrefix("g").toLong <= tail &&
+      s.isFile && pointerSeq(s.getPath.getName).exists(_ <= tail) &&
         readPointerState(f, s.getPath) == PointerUnreadable
     }
   }
@@ -272,60 +248,22 @@ class TableStore(spark: SparkSession, root: String,
     pointerCache.remove(p.toString)
   }
 
-  /** Every generation-shaped entry on disk, same-seq DUPLICATES
-    * included. Duplicates exist transiently: the atomic rename claims a
-    * NAME, so two writers committing the same slot under different
-    * KINDS (append's `g5-delta` vs compaction's `g5-comp`) both
-    * succeed — a hole name-claiming cannot close. Resolution is
-    * deterministic instead: the lexicographically-first full name owns
-    * the slot ([[generations]] applies it for every reader), the loser
-    * detects it post-commit and withdraws ([[commit]]), and [[gc]]
-    * reclaims any loser that crashed before withdrawing. */
-  private def rawGenerations(table: String): Seq[(Long, String, Path)] = {
+  /** The committed generations, ascending seq: one per complete
+    * pointer (the pointer name owns its slot, so seqs are unique). */
+  private def generations(table: String): Seq[(Long, String, Path)] = {
     val dir = tableDir(table)
+    val cd = commitsDir(table)
     val f = fs(dir)
-    if (pointerCommits) {
-      val cd = commitsDir(table)
-      if (!f.exists(cd)) Seq.empty
-      else f.listStatus(cd).toSeq
-        .filter(s => s.isFile && s.getPath.getName.startsWith("g") &&
-          s.getPath.getName.stripPrefix("g").forall(_.isDigit))
-        .flatMap { s =>
-          readPointer(f, s.getPath).map { case (kind, dataName) =>
-            (s.getPath.getName.stripPrefix("g").toLong, kind,
-              new Path(dir, dataName))
-          }
-        }
-        .sortBy(g => (g._1, g._3.getName))
-    } else if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("g"))
+    if (!f.exists(cd)) Seq.empty
+    else f.listStatus(cd).toSeq.filter(_.isFile)
       .flatMap { s =>
-        s.getPath.getName.stripPrefix("g").split("-", 2) match {
-          case Array(seq, kind) if seq.forall(_.isDigit) =>
-            Some((seq.toLong, kind, s.getPath))
-          case _ => None
-        }
+        for {
+          seq <- pointerSeq(s.getPath.getName)
+          (kind, dataName) <- readPointer(f, s.getPath)
+        } yield (seq, kind, new Path(dir, dataName))
       }
-      .sortBy(g => (g._1, g._3.getName))
+      .sortBy(_._1)
   }
-
-  /** Same-slot tie-break, applied identically by readers and by the
-    * committer's post-claim check. Snapshot-guarded kinds (comp, fold,
-    * merge — everything committed under `expectedSeq`) rank AFTER the
-    * free kinds (delta, full): a snapshot writer that loses a slot
-    * simply returns false and re-runs against a fresh snapshot that
-    * INCLUDES the rival's rows, whereas a withdrawing append would
-    * make already-committed rows transiently vanish. Ties within a
-    * class break on the full name. */
-  private def slotRank(kind: String, name: String): (Int, String) =
-    (if (kind == "comp" || kind == TableStore.mergeKind ||
-         TableStore.foldStart(kind).isDefined) 1 else 0, name)
-
-  private def generations(table: String): Seq[(Long, String, Path)] =
-    rawGenerations(table)
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.minBy(g => slotRank(g._2, g._3.getName)))
 
   /** "full" (overwrite) and "comp" (compaction) generations both contain
     * the whole table at their seq; "comp" additionally promises it
@@ -802,8 +740,8 @@ class TableStore(spark: SparkSession, root: String,
     * optimization: an unreadable list must FAIL the read — degrading
     * to empty would resurrect every rewritten row as a duplicate. A
     * genuinely absent file is fine (an insert-only merge replaces
-    * nothing); data and tombstones commit under one atomic rename, so
-    * absent never means lost. */
+    * nothing); tombstones are staged before the pointer publishes the
+    * generation, so absent never means lost. */
   private def readReplaces(gen: Path): Map[String, Set[String]] = {
     val p = new Path(gen, TableStore.replacesFile)
     val f = fs(p)
@@ -827,7 +765,7 @@ class TableStore(spark: SparkSession, root: String,
     * which readers treat as must-read — never a commit failure. */
   private def writeStats(table: String, tmp: Path, f: FileSystem): Unit =
     try {
-      // reading the "_tmp-" dir warns ("all paths were ignored") but
+      // reading the "_data-" dir warns ("all paths were ignored") but
       // resolves — explicit root paths bypass the hidden-path filter;
       // the directory read (not a part-file list) matters: it's what
       // resolves `col=value/` partition columns into the stats
@@ -944,8 +882,8 @@ class TableStore(spark: SparkSession, root: String,
     * match an existing row replace it; the rest insert. Only the files
     * CONTAINING a matched key are rewritten — their surviving rows and
     * all of `updates` land in one new "merge" generation whose
-    * tombstone list (`_replaces.tsv`, committed under the same atomic
-    * rename) hides the rewritten files from every reader. Untouched
+    * tombstone list (`_replaces.tsv`, published by the same pointer)
+    * hides the rewritten files from every reader. Untouched
     * files — the overwhelming majority of a 100 TB table — are never
     * opened for writing.
     *
@@ -1150,10 +1088,11 @@ class TableStore(spark: SparkSession, root: String,
     df.coalesce(math.max(1L, bytes / TableStore.targetFileBytes).toInt)
   }
 
-  /** Delete superseded generations (those older than the newest full
-    * generation) that are past the grace period. Safe to run any time:
-    * a generation younger than `gcGraceMs` is never touched, so lazy
-    * DataFrames created before the supersession keep resolving. */
+  /** Delete superseded generations (below the newest full generation,
+    * or covered by a fold) once their superseder is past the grace
+    * period, plus aged strays no reader can see. Safe to run any time:
+    * nothing is reclaimed within `gcGraceMs` of being superseded, so
+    * lazy DataFrames created before the supersession keep resolving. */
   def gc(table: String): Unit = {
     val gens = generations(table)
     val lastFull = gens.lastIndexWhere(g => isFullKind(g._2))
@@ -1165,103 +1104,77 @@ class TableStore(spark: SparkSession, root: String,
     // millisecond as the sweep (fast box, in-commit gc) was never
     // reclaimable in that sweep, which flaked the zero-grace specs
     val cutoff = System.currentTimeMillis() - gcGraceMs
-    // a generation's age: in pointer mode the POINTER file's mtime is
-    // the commit instant (the data dir was staged earlier); in rename
-    // mode the dir mtime is the rename instant
+    // a generation's age is its POINTER's mtime — the commit instant
+    // (the data dir was staged earlier)
     def mtimeOf(g: (Long, String, Path)): Long =
-      f.getFileStatus(
-        if (pointerCommits) pointerPath(table, g._1) else g._3)
-        .getModificationTime
-    // set in the pointer branch below; gates the supersede sweeps at
-    // the end — an unreadable pointer may hide a committed generation
-    // `gens` doesn't show, and reclaiming "superseded" chains around a
-    // hidden generation destroys the evidence manual recovery needs
-    var anyUnreadable = false
-    if (!pointerCommits) {
-      // same-slot losers (a racer that crashed between claiming a name
-      // and withdrawing it): invisible to every reader by the
-      // deterministic-winner rule, reclaimable once aged past the grace
-      val winners = gens.map(_._3.getName).toSet
-      rawGenerations(table).filterNot(g => winners(g._3.getName)).foreach { g =>
-        try {
-          if (f.getFileStatus(g._3).getModificationTime <= cutoff)
-            f.delete(g._3, true)
-        } catch { case _: java.io.FileNotFoundException => () }
+      f.getFileStatus(pointerPath(table, g._1)).getModificationTime
+    // Strays: (a) torn pointers a crashed writer left (created but
+    // unparseable — cannot happen on a real conditional PUT, handled
+    // for the filesystem emulation); (b) staged `_data-` dirs whose
+    // writer died before claiming a slot. Both invisible to readers;
+    // reclaimable once aged.
+    val cd = commitsDir(table)
+    // one state read per pointer, reused by both sweeps below
+    val ptrStates: Seq[(org.apache.hadoop.fs.FileStatus, PointerRead)] =
+      if (!f.exists(cd)) Seq.empty
+      else f.listStatus(cd).toSeq.map { s =>
+        // a non-pointer-shaped stray is provably not a commit marker —
+        // same reclaim class as torn content
+        (s, if (pointerSeq(s.getPath.getName).isEmpty) PointerTorn
+            else readPointerState(f, s.getPath))
       }
-    } else {
-      // pointer-mode strays: (a) torn pointers a crashed writer left
-      // (created but unparseable — cannot happen on a real conditional
-      // PUT, handled for the emulation); (b) staged `_data-` dirs whose
-      // writer died before claiming a slot. Both invisible to readers;
-      // reclaimable once aged.
-      val cd = commitsDir(table)
-      // one state read per pointer, reused by both sweeps below
-      val ptrStates: Seq[(org.apache.hadoop.fs.FileStatus, PointerRead)] =
-        if (!f.exists(cd)) Seq.empty
-        else f.listStatus(cd).toSeq.map { s =>
-          val nm = s.getPath.getName
-          val st =
-            // a non-pointer-shaped stray is provably not a commit
-            // marker — same reclaim class as torn content
-            if (!(nm.startsWith("g") && nm.stripPrefix("g").forall(_.isDigit)))
-              PointerTorn
-            else readPointerState(f, s.getPath)
-          (s, st)
+    // reclaim only what is PROVABLY not a commit marker (torn /
+    // non-pointer-shaped). An UNREADABLE pointer may be a committed one
+    // behind an IO fault — deleting it would orphan acknowledged rows —
+    // so it is left alone no matter how old.
+    ptrStates.foreach { case (s, st) =>
+      if (st == PointerTorn && s.getModificationTime <= cutoff)
+        deletePointerQuietly(f, s.getPath)
+    }
+    // An unreadable pointer may hide a committed generation `gens`
+    // doesn't show; it gates the orphan sweep and both supersede sweeps.
+    val anyUnreadable = ptrStates.exists(_._2 == PointerUnreadable)
+    // The orphan `_data-` sweep: an unreadable pointer hides which data
+    // dir it references, so `referenced` would miss an entry and a
+    // committed generation's data would read as an orphan stage —
+    // reclaiming it is silent row loss. Skipping the sweep is always
+    // safe (strays just live longer). The listing is taken afresh, so a
+    // generation published since `gens` was read keeps its data.
+    if (!anyUnreadable) {
+      val referenced = generations(table).map(_._3.getName).toSet
+      if (f.exists(dir)) f.listStatus(dir)
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("_data-"))
+        .foreach { s =>
+          if (!referenced(s.getPath.getName) &&
+              s.getModificationTime <= cutoff)
+            try f.delete(s.getPath, true)
+            catch { case _: java.io.FileNotFoundException => () }
         }
-      // reclaim only what is PROVABLY not a commit marker (torn /
-      // non-pointer-shaped). An UNREADABLE pointer may be a committed
-      // one behind an IO fault — deleting it would orphan acknowledged
-      // rows — so it is left alone no matter how old.
-      ptrStates.foreach { case (s, st) =>
-        if (st == PointerTorn && s.getModificationTime <= cutoff)
-          deletePointerQuietly(f, s.getPath)
-      }
-      anyUnreadable = ptrStates.exists(_._2 == PointerUnreadable)
-      // The orphan `_data-` sweep is gated on EVERY pointer being
-      // readable: an unreadable pointer hides which data dir it
-      // references, so the `referenced` set below would be missing an
-      // entry and a committed generation's data would read as an
-      // orphan stage — reclaiming it is silent row loss. Skipping the
-      // sweep this round is always safe (strays just live longer).
-      if (!anyUnreadable) {
-        val referenced = rawGenerations(table).map(_._3.getName).toSet
-        if (f.exists(dir)) f.listStatus(dir)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("_data-"))
-          .foreach { s =>
-            if (!referenced(s.getPath.getName) &&
-                s.getModificationTime <= cutoff)
-              try f.delete(s.getPath, true)
-              catch { case _: java.io.FileNotFoundException => () }
-          }
-      }
     }
     // a concurrent gc/compact may delete a generation between our
-    // listing and the stat — already-gone is success, not failure.
-    // Pointer mode deletes the pointer FIRST (readers listing after
-    // never resolve the gen), then the data.
+    // listing and the stat — already-gone is success, not failure. The
+    // pointer goes FIRST (readers listing after never resolve the
+    // generation), then the data.
     def rm(g: (Long, String, Path)): Unit =
       try {
         if (mtimeOf(g) <= cutoff) {
-          if (pointerCommits) deletePointerQuietly(f, pointerPath(table, g._1))
+          deletePointerQuietly(f, pointerPath(table, g._1))
           f.delete(g._3, true)
         }
       } catch { case _: java.io.FileNotFoundException => () }
     // full-superseded originals: like the fold-covered ones below,
     // reclaimable only once the SUPERSEDING full generation has itself
     // aged past the grace period — the full's commit is the moment
-    // they became superseded. Measuring the originals' own mtimes
-    // alone (arbitrarily old on any long-lived table) let a comp's
-    // in-commit gc destroy the pre-comp chain inside the window where
-    // a racing append could still steal the comp's slot (free kinds
-    // win slot ties), silently losing every pre-comp row.
-    // Both supersede sweeps are additionally gated on every pointer
-    // being readable (anyUnreadable): with a hidden committed
-    // generation possibly interleaved in the chain, "superseded by
-    // the full/fold" cannot be trusted — the superseding snapshot was
-    // itself built without the hidden rows (compact/foldDeltas now
-    // refuse in that state, but a comp committed by an older writer,
-    // or just before the fault, must not trigger reclamation around
-    // the hidden slot). Skipping a sweep is always safe.
+    // they became superseded, and a reader that listed just before it
+    // must still resolve them. Their own mtimes are arbitrarily old on
+    // any long-lived table, so they cannot be the clock.
+    // Both supersede sweeps skip while any pointer is unreadable: with
+    // a hidden committed generation possibly interleaved in the chain,
+    // "superseded by the full/fold" cannot be trusted — the superseding
+    // snapshot may have been built without the hidden rows (compact and
+    // foldDeltas refuse in that state, but a generation committed just
+    // before the fault must not trigger reclamation around the hidden
+    // slot). Skipping a sweep is always safe.
     if (lastFull > 0 && !anyUnreadable) {
       val fullOld =
         try mtimeOf(gens(lastFull)) <= cutoff
@@ -1285,240 +1198,144 @@ class TableStore(spark: SparkSession, root: String,
     }
   }
 
-  /** Stage `df` to a tmp dir, then claim a generation slot by atomic
-    * rename. With `expectedSeq` set (compaction), ONLY that slot is
+  /** Stage `df` into a fresh `_data-` dir, then publish it by claiming
+    * a generation slot with a create-exclusive pointer write. With
+    * `expectedSeq` set (snapshot writers), ONLY that slot is
     * acceptable: returns false — staged data discarded, nothing
     * committed — if another writer claimed it first. Without it
-    * (append/overwrite), retries under fresh slot numbers until the
-    * rename wins. */
+    * (append/overwrite), retries the next free slot until it wins. */
   private def commit(table: String, df: DataFrame, kind: String,
                      expectedSeq: Option[Long],
                      replaces: Map[String, Set[String]] = Map.empty): Boolean = {
     val dir = tableDir(table)
     val f = fs(dir)
     f.mkdirs(dir)
-    // tmp dir is writer-unique (a shared name would let two concurrent
-    // writers clobber each other's files mid-write); the generation slot
-    // is claimed by the atomic rename, retried under a fresh number if
-    // another writer took it first — optimistic concurrency, like any
-    // log-structured table format's commit protocol. In pointer mode
-    // the staged dir is already its FINAL name (never renamed): the
-    // slot is claimed by the create-exclusive pointer write instead.
-    var tmp = new Path(dir,
-      (if (pointerCommits) "_data-" else "_tmp-") +
-        java.util.UUID.randomUUID().toString)
+    // the staged dir is writer-unique (a shared name would let two
+    // concurrent writers clobber each other's files mid-write) and is
+    // already its FINAL name: publishing never moves it
+    val staged = new Path(dir, "_data-" + java.util.UUID.randomUUID().toString)
     val partitionBy = layout(table)
     val writer = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(tmp.toString)
+      .parquet(staged.toString)
     // zone map, Bloom sidecar and tombstone list land INSIDE the staged
-    // dir, so the atomic rename commits data, stats and replaces
-    // together (the "_"-prefixed names are invisible to parquet
-    // directory reads). The tombstones are written DIRECTLY (no
-    // best-effort swallow): a merge whose replaces cannot be recorded
-    // must not commit at all
+    // dir, so one pointer publishes data, stats and replaces together
+    // (the "_"-prefixed names are invisible to parquet directory
+    // reads). The tombstones are written DIRECTLY (no best-effort
+    // swallow): a merge whose replaces cannot be recorded must not
+    // commit at all
     if (replaces.nonEmpty) {
-      val out = f.create(new Path(tmp, TableStore.replacesFile), true)
+      val out = f.create(new Path(staged, TableStore.replacesFile), true)
       try out.write(TableStore.serializeReplaces(replaces).getBytes("UTF-8"))
       finally out.close()
     }
-    writeStats(table, tmp, f)
-    if (pointerCommits) {
-      var attempts = 0
-      // Slot-skip floor. A young torn/unreadable pointer at the natural
-      // next slot is NEVER deleted inline: it may be a rival mid-write
-      // between create and close (the advertised HDFS/local targets
-      // tear exactly there), or a complete pointer behind a transient
-      // read fault — deleting either orphans acknowledged rows that gc
-      // later reclaims, i.e. silent loss. Free-kind commits instead
-      // claim the slot AFTER it: seq order alone carries the
-      // semantics (deltas commute; a later full/comp supersedes), so a
-      // hole in the seq line is benign, and gc reclaims the torn
-      // debris once aged. Only a torn pointer past the gc grace — the
-      // exact condition gc itself uses — is reclaimed in place.
-      var seqFloor = 0L
-      while (true) {
-        attempts += 1
-        val next = math.max(seqFloor,
-          generations(table).lastOption.map(_._1 + 1).getOrElse(0L))
-        if (expectedSeq.exists(_ != next)) {
-          f.delete(tmp, true)
-          return false
-        }
-        val ptr = pointerPath(table, next)
-        f.mkdirs(ptr.getParent)
-        // Did OUR pointer land complete at this path? Decides every
-        // ambiguous failure below: a complete own pointer IS the
-        // commit (retrying would double-publish the same data dir
-        // under a second seq — duplicate rows now, silent row loss
-        // when gc reclaims one of them); anything else must leave the
-        // name free (or torn-and-reclaimable) before we retry, or the
-        // table wedges on our own debris.
-        def pointerIsMine: Boolean =
-          readPointer(f, ptr).exists(_._2 == tmp.getName)
-        // Lost the name to an EXISTING pointer that is not ours.
-        // Resolve by state: a complete rival is a plain lost race
-        // (recomputed `next` steps past it); a torn pointer aged past
-        // the gc grace is reclaimed exactly as gc would; anything
-        // younger or unreadable is left untouched and the slot is
-        // stepped over via the floor (see the loop header).
-        def stepPastBlockedSlot(): Unit =
-          readPointerState(f, ptr) match {
-            case PointerOk(_, _) => ()
-            case PointerGone     => () // vanished (raced gc): slot is free again
-            case PointerTorn if pointerAgedPastGrace(f, ptr) =>
-              deletePointerQuietly(f, ptr)
-            case _ => seqFloor = next + 1
-          }
-        val won =
-          try {
-            // create-exclusive IS the slot lock: exactly one writer can
-            // create this name, so same-seq ties cannot exist. On a
-            // real object store the whole pointer is ONE conditional
-            // PUT (cannot tear); the branches below exist for the
-            // filesystem emulation, where create/write/close are
-            // separate steps that can fail independently.
-            val out = f.create(ptr, false)
-            try {
-              out.write(s"$kind\n${tmp.getName}".getBytes("UTF-8"))
-              out.close()
-              true
-            } catch {
-              case e: java.io.IOException =>
-                // we own the name but the content may be absent, torn,
-                // or fully flushed (close() failing after flush)
-                readPointerState(f, ptr) match {
-                  case PointerOk(_, d) if d == tmp.getName => true
-                  case PointerTorn | PointerGone =>
-                    // our own torn write — the name is ours to reclaim
-                    deletePointerQuietly(f, ptr)
-                    if (pointerIsMine) true
-                    else { f.delete(tmp, true); throw e }
-                  case _ =>
-                    // read-back failed: the pointer may be COMPLETE
-                    // (write flushed before close failed). Deleting ptr
-                    // or tmp here could destroy a committed generation;
-                    // leave both and report the ambiguity — gc reclaims
-                    // the debris iff the pointer is genuinely torn.
-                    throw e
-                }
-            }
-          } catch {
-            case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-              // the name exists: a rival's complete pointer (lost the
-              // race), a rival mid-write, or a crashed writer's torn
-              // debris — stepPastBlockedSlot keeps progress without
-              // ever deleting a pointer that might be (or become) a
-              // live commit marker
-              if (pointerIsMine) true
-              else { stepPastBlockedSlot(); false }
-            case e: java.io.IOException =>
-              // ambiguous create failure: some filesystems signal an
-              // existing file this way instead of FileAlreadyExists
-              if (pointerIsMine) true
-              else if (f.exists(ptr)) { stepPastBlockedSlot(); false }
-              else { f.delete(tmp, true); throw e }
-          }
-        if (won) {
-          if (isFullKind(kind)) gc(table)
-          return true
-        }
-        if (expectedSeq.isDefined) {
-          // the expected slot went to someone else — abandon, caller
-          // re-snapshots (identical semantics to the rename path)
-          f.delete(tmp, true)
-          return false
-        }
-        if (attempts >= 20) {
-          f.delete(tmp, true)
-          throw new IllegalStateException(
-            s"pointer commit failed after $attempts tries: $ptr")
-        }
-      }
-    }
+    writeStats(table, staged, f)
     var attempts = 0
-    var committed = -1L
-    while (committed < 0) {
+    // Slot-skip floor. A young torn/unreadable pointer at the natural
+    // next slot is NEVER deleted inline: it may be a rival mid-write
+    // between create and close (the advertised HDFS/local targets
+    // tear exactly there), or a complete pointer behind a transient
+    // read fault — deleting either orphans acknowledged rows that gc
+    // later reclaims, i.e. silent loss. Appends and overwrites instead
+    // claim the slot AFTER it: seq order alone carries the
+    // semantics (deltas commute; a later full/comp supersedes), so a
+    // hole in the seq line is benign, and gc reclaims the torn
+    // debris once aged. Only a torn pointer past the gc grace — the
+    // exact condition gc itself uses — is reclaimed in place.
+    var seqFloor = 0L
+    var won = false
+    while (!won) {
       attempts += 1
-      val next = generations(table).lastOption.map(_._1 + 1).getOrElse(0L)
+      val next = math.max(seqFloor,
+        generations(table).lastOption.map(_._1 + 1).getOrElse(0L))
       if (expectedSeq.exists(_ != next)) {
-        // someone committed past our snapshot — this staged full gen
-        // no longer contains the table; abandon it
-        f.delete(tmp, true)
+        f.delete(staged, true)
         return false
       }
-      val dest = new Path(dir, f"g$next%07d-$kind")
-      if (f.rename(tmp, dest)) {
-        // rename onto an EXISTING directory returns true but moves the
-        // source INSIDE it (HDFS old-API semantics AND the local fs —
-        // probed): that is a LOST RACE, not a commit. Detect the nested
-        // marker, pull the staged data back out to a fresh tmp, and
-        // retry under the next slot — the winner's generation is
-        // untouched (the nested "_"-dir was invisible to reads), and
-        // the loser's rows are never silently dropped.
-        val nested = new Path(dest, tmp.getName)
-        if (!f.exists(nested)) {
-          // the rename claimed the NAME — now check the SLOT: a racer
-          // committing the same seq under a different kind also
-          // succeeded, and readers resolve such ties to the
-          // lexicographically-first name. If that is not us, withdraw
-          // (pull the staged data back out, retry the next slot) —
-          // without this, the loser's append looked "committed" while
-          // every read ignored it: silent row loss.
-          val rivals = rawGenerations(table)
-            .filter(g => g._1 == next && g._3.getName != dest.getName)
-          val rivalRanks = rivals.map(r => slotRank(r._2, r._3.getName))
-          val myRank = slotRank(kind, dest.getName)
-          // A free writer that finds a snapshot-kind rival would WIN the
-          // reader tie (free kinds rank first) — but that rival may have
-          // ALREADY committed, acknowledged success to its caller, and
-          // gc'd the chain its snapshot supersedes. Stealing the slot
-          // would make every reader ignore the acknowledged comp/fold
-          // forever. So the free writer yields: withdraw the staged data
-          // and retry the next slot. The reader tie rule itself must stay
-          // free-first for the mirror arrival order (a snapshot writer
-          // landing SECOND must lose and re-snapshot, or the rival
-          // delta's acknowledged rows would vanish).
-          val yieldToSnapshot = myRank._1 == 0 && rivalRanks.exists(_._1 == 1)
-          if (!yieldToSnapshot && rivalRanks.forall(r =>
-              myRank._1 < r._1 ||
-              (myRank._1 == r._1 && myRank._2 < r._2)))
-            committed = next
-          else if (expectedSeq.isDefined) {
-            // expected-slot writers (compaction/fold) treat a lost slot
-            // like any other conflict: abandon and let the caller
-            // re-snapshot
-            f.delete(dest, true)
-            return false
-          } else {
-            val recovered = new Path(dir,
-              s"_tmp-${java.util.UUID.randomUUID().toString}")
-            if (!f.rename(dest, recovered))
-              throw new IllegalStateException(
-                s"slot-race withdrawal failed: cannot move $dest")
-            tmp = recovered
-            if (attempts >= 20) {
-              f.delete(tmp, true)
-              throw new IllegalStateException(
-                s"atomic commit failed after $attempts tries: $dest")
-            }
-          }
-        } else {
-          val recovered = new Path(dir,
-            s"_tmp-${java.util.UUID.randomUUID().toString}")
-          if (!f.rename(nested, recovered))
-            throw new IllegalStateException(
-              s"commit race recovery failed: cannot extract $nested")
-          tmp = recovered
-          if (attempts >= 20) {
-            f.delete(tmp, true)
-            throw new IllegalStateException(
-              s"atomic commit failed after $attempts tries: $dest")
-          }
+      val ptr = pointerPath(table, next)
+      f.mkdirs(ptr.getParent)
+      // Did OUR pointer land complete at this path? Decides every
+      // ambiguous failure below: a complete own pointer IS the
+      // commit (retrying would double-publish the same data dir
+      // under a second seq — duplicate rows now, silent row loss
+      // when gc reclaims one of them); anything else must leave the
+      // name free (or torn-and-reclaimable) before we retry, or the
+      // table wedges on our own debris.
+      def pointerIsMine: Boolean =
+        readPointer(f, ptr).exists(_._2 == staged.getName)
+      // Lost the name to an EXISTING pointer that is not ours.
+      // Resolve by state: a complete rival is a plain lost race
+      // (recomputed `next` steps past it); a torn pointer aged past
+      // the gc grace is reclaimed exactly as gc would; anything
+      // younger or unreadable is left untouched and the slot is
+      // stepped over via the floor (see the loop header).
+      def stepPastBlockedSlot(): Unit =
+        readPointerState(f, ptr) match {
+          case PointerOk(_, _) => ()
+          case PointerGone     => () // vanished (raced gc): slot is free again
+          case PointerTorn if pointerAgedPastGrace(f, ptr) =>
+            deletePointerQuietly(f, ptr)
+          case _ => seqFloor = next + 1
         }
-      } else if (attempts >= 20) {
-        f.delete(tmp, true)
-        throw new IllegalStateException(s"atomic commit failed after $attempts tries: $dest")
+      won =
+        try {
+          // create-exclusive IS the slot lock: exactly one writer can
+          // create this name, so same-seq ties cannot exist. On a
+          // real object store the whole pointer is ONE conditional
+          // PUT (cannot tear); the branches below exist for the
+          // filesystem emulation, where create/write/close are
+          // separate steps that can fail independently.
+          val out = f.create(ptr, false)
+          try {
+            out.write(s"$kind\n${staged.getName}".getBytes("UTF-8"))
+            out.close()
+            true
+          } catch {
+            case e: java.io.IOException =>
+              // we own the name but the content may be absent, torn,
+              // or fully flushed (close() failing after flush)
+              readPointerState(f, ptr) match {
+                case PointerOk(_, d) if d == staged.getName => true
+                case PointerTorn | PointerGone =>
+                  // our own torn write — the name is ours to reclaim
+                  deletePointerQuietly(f, ptr)
+                  if (pointerIsMine) true
+                  else { f.delete(staged, true); throw e }
+                case _ =>
+                  // read-back failed: the pointer may be COMPLETE
+                  // (write flushed before close failed). Deleting ptr
+                  // or staged here could destroy a committed generation;
+                  // leave both and report the ambiguity — gc reclaims
+                  // the debris iff the pointer is genuinely torn.
+                  throw e
+              }
+          }
+        } catch {
+          case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
+            // the name exists: a rival's complete pointer (lost the
+            // race), a rival mid-write, or a crashed writer's torn
+            // debris — stepPastBlockedSlot keeps progress without
+            // ever deleting a pointer that might be (or become) a
+            // live commit marker
+            if (pointerIsMine) true
+            else { stepPastBlockedSlot(); false }
+          case e: java.io.IOException =>
+            // ambiguous create failure: some filesystems signal an
+            // existing file this way instead of FileAlreadyExists
+            if (pointerIsMine) true
+            else if (f.exists(ptr)) { stepPastBlockedSlot(); false }
+            else { f.delete(staged, true); throw e }
+        }
+      if (!won && expectedSeq.isDefined) {
+        // the expected slot went to someone else — abandon, caller
+        // re-snapshots
+        f.delete(staged, true)
+        return false
+      }
+      if (!won && attempts >= 20) {
+        f.delete(staged, true)
+        throw new IllegalStateException(
+          s"pointer commit failed after $attempts tries: $ptr")
       }
     }
     // superseded generations are GC'd lazily (grace period) — deleting

@@ -524,7 +524,7 @@ object CurationOps {
           docs => logRegScored(s, d).select(col("doc_id"), col("quality"))
             .join(docs.select(col("doc_id")), Seq("doc_id")))
       val docs = Tables.documentsWithEdges(s, d)
-      val store = SimulatedStore.tableStore(s, d, "q199_card_v1") { st =>
+      val store = SimulatedStore.tableStore(s, d, "q199_card_v2") { st =>
         val card = mk(st)
         card.build(docs.filter(col("doc_id") < 400L))
         card.refreshBatch(docs.filter(col("doc_id") >= 400L), docs,

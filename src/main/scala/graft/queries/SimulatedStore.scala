@@ -21,7 +21,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * oracle checks the query END TO END every round, so a cache written
   * by an older semantic of the producing plan mismatches the oracle
   * and turns the round red. Bump the tag's `_vN` suffix whenever the
-  * producing plan's semantics change.
+  * producing plan's semantics change, and bump every [[tableStore]]
+  * slot's tag whenever the TableStore on-disk layout changes (a slot
+  * written in an older layout reads as never written behind its ready
+  * marker).
   */
 object SimulatedStore {
   private def dir(sfDir: String, tag: String): String = {

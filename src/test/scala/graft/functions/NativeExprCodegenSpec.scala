@@ -127,8 +127,10 @@ class NativeExprCodegenSpec extends AnyFunSuite {
       .select(minhashHex(col("shingles"), 4).as("s"),
         trigramCounts(element_at(col("shingles"), 1), 3, 8).as("h"))
       .queryExecution.executedPlan
-    val inSpan = plan.collect { case w: WholeStageCodegenExec => w }
-      .exists(_.toString.contains("minhash_hex"))
-    assert(inSpan, s"expected minhash_hex inside WholeStageCodegen:\n$plan")
+    val spans = plan.collect { case w: WholeStageCodegenExec => w.toString }
+    Seq("minhash_hex", "trigram_bucket_counts").foreach { fn =>
+      assert(spans.exists(_.contains(fn)),
+        s"expected $fn inside WholeStageCodegen:\n$plan")
+    }
   }
 }

@@ -125,11 +125,9 @@ class BloomSidecarSpec extends AnyFunSuite {
   test("a generation without a sidecar is always read (safety)") {
     val store = freshStore(bloom = true)
     threeGens(store)
-    // strip one generation's sidecar: probe must still find its row
-    val gens = new java.io.File(
-      store.read("t").get.inputFiles.head.stripPrefix("file:")
-    ).getParentFile.getParentFile.listFiles.filter(_.getName.startsWith("g"))
-    gens.foreach(g => new java.io.File(g, TableStore.bloomFile).delete())
+    // strip the generations' sidecars: probe must still find its row
+    StoreFiles.dirsOf(StoreFiles.snapshot(store, "t")).foreach(g =>
+      new java.io.File(g.toString, TableStore.bloomFile).delete())
     val got = store.scan("t", $"id" === "6x0153").get
     assert(rows(got) == Set(("6x0153", 153L)))
   }

@@ -38,8 +38,7 @@ class DuckDbSnapshotInteropSpec extends AnyFunSuite {
     assume(duckdbAvailable, "python3+duckdb not available")
     val root = java.nio.file.Files
       .createTempDirectory("duckdb-interop").toString
-    val store = new TableStore(spark, root, autoCompactDeltas = 1000,
-      pointerCommits = true)
+    val store = new TableStore(spark, root, autoCompactDeltas = 1000)
     // two generations + a merge (tombstones the replaced rows) + a
     // schema-evolved append (older generations predate column `w`)
     store.append("t", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"))
@@ -52,7 +51,6 @@ class DuckDbSnapshotInteropSpec extends AnyFunSuite {
     val duck = runTool(snap,
       "SELECT concat(k, '|', v, '|', coalesce(CAST(w AS VARCHAR), 'NULL'))" +
         " AS r FROM snap ORDER BY k")
-      .map(_.stripPrefix("('").stripSuffix("',)"))
     // Spark side: the same canonical line from read()
     val sparkRows = store.read("t").get
       .select(org.apache.spark.sql.functions.concat_ws("|",

@@ -24,25 +24,18 @@ class FoldSpec extends AnyFunSuite {
   private def rows(store: TableStore, table: String): Set[Long] =
     store.read(table).get.select("v").collect().map(_.getLong(0)).toSet
 
-  /** Backdate every generation dir so a grace-guarded gc sees them all
-    * as past the window — deterministic, no sleeps against filesystem
-    * mtime granularity. */
-  private def ageGenerations(root: String, table: String): Unit =
-    new java.io.File(s"$root/$table").listFiles()
-      .filter(_.getName.startsWith("g"))
-      .foreach(_.setLastModified(System.currentTimeMillis() - 60000))
-
   test("fold preserves contents exactly and hides the covered run") {
     val (store, _) = freshStore()
     (0 until 5).foreach(i => store.append("t", Seq(i.toLong).toDF("v")))
     val before = rows(store, "t")
-    assert(store.foldDeltas("t"))
+    val foldFiles = StoreFiles.added(store, "t")(assert(store.foldDeltas("t")))
     assert(rows(store, "t") == before)
     val hist = store.history("t")
     assert(hist.last._2 == "fold0000000", s"got ${hist.last}")
+    assert(hist.last._1 == 5L)
     // live read unions ONE generation now, not five
-    assert(store.read("t").get.inputFiles
-      .forall(_.contains(f"g${5}%07d")), "covered originals still read")
+    assert(StoreFiles.opened(store.read("t").get).forall(foldFiles),
+      "covered originals still read")
   }
 
   test("fold run stops at a merge generation") {
@@ -97,7 +90,8 @@ class FoldSpec extends AnyFunSuite {
     val (store, root) = freshStore(grace = 0L)
     (0 until 4).foreach(i => store.append("t", Seq(i.toLong).toDF("v")))
     assert(store.foldDeltas("t"))
-    ageGenerations(root, "t") // mtime granularity must not keep them alive
+    // backdate every generation: mtime granularity must not keep them alive
+    StoreFiles.ageAll(store, root, "t")
     store.gc("t") // grace 0: covered originals reclaimed immediately
     intercept[TableStore.VacuumedHistoryException] {
       store.readChangesSince("t", 1L)
@@ -121,7 +115,7 @@ class FoldSpec extends AnyFunSuite {
     val (gone, groot) = freshStore(grace = 0L)
     (0 until 4).foreach(i => gone.append("t", Seq(i.toLong).toDF("v")))
     assert(gone.foldDeltas("t"))
-    ageGenerations(groot, "t")
+    StoreFiles.ageAll(gone, groot, "t")
     gone.gc("t")
     intercept[TableStore.VacuumedHistoryException](gone.readAt("t", 1L))
     // at or past the fold slot, the fold serves
@@ -130,16 +124,15 @@ class FoldSpec extends AnyFunSuite {
   }
 
   test("gc spares covered originals while the fold is younger than grace") {
-    val (store, root) = freshStore(grace = 60 * 60 * 1000)
+    val (store, _) = freshStore(grace = 60 * 60 * 1000)
     (0 until 3).foreach(i => store.append("t", Seq(i.toLong).toDF("v")))
     assert(store.foldDeltas("t"))
     store.gc("t")
     // mid-range feed still resolves: nothing was deleted
     assert(store.readChangesSince("t", 0L).get
       .select("v").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-    val dirs = new java.io.File(s"$root/t").listFiles().map(_.getName)
-      .filter(_.startsWith("g")).toSet
-    assert((0 to 3).forall(i => dirs.exists(_.startsWith(f"g$i%07d"))))
+    val seqs = store.history("t").map(_._1).toSet
+    assert((0 to 3).forall(i => seqs(i.toLong)))
   }
 
   test("auto maintenance folds instead of rewriting; tier-2 compacts") {

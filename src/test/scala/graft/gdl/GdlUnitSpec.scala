@@ -312,28 +312,20 @@ class TableStoreSpec extends AnyFunSuite {
     assert(latest == Seq(("e1", "Succeeded"), ("e2", "Running")))
   }
 
-  private def genDirs(root: String, table: String): Seq[String] = {
-    val d = new java.io.File(root, table)
-    Option(d.listFiles()).fold(Seq.empty[String])(
-      _.map(_.getName).filter(_.startsWith("g")).sorted.toSeq)
-  }
-
   test("auto-compaction bounds delta count without changing contents") {
     val root = java.nio.file.Files.createTempDirectory("store-ac").toString
     val store = new TableStore(spark, root, autoCompactDeltas = 3, gcGraceMs = 0L)
     (1 to 10).foreach(i => store.append("t", Seq(i).toDF("x")))
     assert(store.read("t").get.as[Int].collect().sorted.toSeq == (1 to 10))
-    // reclaim deterministically: backdate dirs (filesystem mtime
+    // reclaim deterministically: backdate generations (filesystem mtime
     // granularity must not keep superseded gens inside the 0ms grace)
-    new java.io.File(s"$root/t").listFiles()
-      .filter(_.getName.startsWith("g"))
-      .foreach(_.setLastModified(System.currentTimeMillis() - 60000))
+    StoreFiles.ageAll(store, root, "t")
     store.gc("t")
     // listings stay bounded: folds collapse the delta runs
-    assert(genDirs(root, "t").size <= 4)
+    assert(store.history("t").size <= 4)
     // tier-1 auto-maintenance commits FOLD generations (minor
     // compaction — O(run), never a table rewrite)
-    assert(genDirs(root, "t").exists(_.contains("-fold")))
+    assert(store.history("t").exists(g => TableStore.foldStart(g._2).isDefined))
   }
 
   test("readChangesSince streams appends, skips compaction, rejects overwrite") {
@@ -382,7 +374,7 @@ class TableStoreSpec extends AnyFunSuite {
     // with the grace elapsed (simulated by grace=0) gc drops superseded gens
     val eager = new TableStore(spark, root, gcGraceMs = 0L)
     eager.gc("t")
-    assert(genDirs(root, "t").size == 1)
+    assert(eager.history("t").size == 1)
     assert(eager.read("t").get.as[Int].collect().toSeq == Seq(9))
   }
 
@@ -455,17 +447,18 @@ class TableStoreSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("store-layout").toString
     val store = new TableStore(spark, root, autoCompactDeltas = 2, gcGraceMs = 0L,
       partitioning = Map("t" -> Seq("k")))
-    def partitionedDirs(): Seq[String] = genDirs(root, "t").filter { g =>
-      val d = new java.io.File(new java.io.File(root, "t"), g)
-      Option(d.listFiles()).exists(_.exists(_.getName.startsWith("k=")))
+    def allPartitioned(): Boolean = {
+      val files = StoreFiles.snapshot(store, "t")
+      files.nonEmpty && files.forall(_.contains("/k="))
     }
     (1 to 6).foreach(i => store.append("t", Seq((i % 2, i)).toDF("k", "x")))
-    // every surviving generation — including compaction's full gens,
+    // every live generation — including compaction's full gens,
     // whichever append triggered them — carries the k=… layout
-    assert(genDirs(root, "t") == partitionedDirs())
+    assert(store.history("t").exists(g => TableStore.foldStart(g._2).isDefined))
+    assert(allPartitioned())
     store.compact("t")
     store.overwrite("t", Seq((0, 99)).toDF("k", "x"))
-    assert(genDirs(root, "t") == partitionedDirs())
+    assert(allPartitioned())
     assert(store.read("t").get.select("k", "x")
       .as[(Int, Int)].collect().toSeq == Seq((0, 99)))
   }

@@ -12,6 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class MergeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+  import StoreFiles.{added, opened}
 
   private def freshStore() = new TableStore(spark,
     java.nio.file.Files.createTempDirectory("merge").toString,
@@ -35,7 +36,7 @@ class MergeSpec extends AnyFunSuite {
     val before = rows(store.read("t").get)
     val updates = Seq(("6x0153", -153L), ("0x0007", -7L), ("zz_new", 999L))
       .toDF("id", "v")
-    store.merge("t", updates, Seq("id"))
+    val mergeFiles = added(store, "t")(store.merge("t", updates, Seq("id")))
 
     val after = rows(store.read("t").get)
     val expected = before
@@ -49,22 +50,23 @@ class MergeSpec extends AnyFunSuite {
     // files only)
     assert(store.history("t").map(_._2) ==
       Seq("delta", "delta", "delta", "merge"))
-    val opened = store.read("t").get.inputFiles.toSeq
-    assert(opened.exists(_.contains("g0000003-merge")))
+    val read = opened(store.read("t").get)
+    assert(read.exists(mergeFiles))
     // 12 original files, 2 tombstoned (one per touched key's file),
     // their 10 siblings still read in place
-    val origOpened = opened.filterNot(_.contains("-merge/"))
+    val origOpened = read.filterNot(mergeFiles)
     assert(origOpened.size == 10, s"expected 10 surviving, got $origOpened")
   }
 
   test("point probe through the Bloom sidecar sees the merged value") {
     val store = freshStore()
     threeGens(store)
-    store.merge("t", Seq(("6x0153", -153L)).toDF("id", "v"), Seq("id"))
+    val mergeFiles = added(store, "t")(
+      store.merge("t", Seq(("6x0153", -153L)).toDF("id", "v"), Seq("id")))
     val got = store.scan("t", $"id" === "6x0153").get
     assert(rows(got) == Set(("6x0153", -153L)))
     // pruned: the merge generation's own sidecar plus nothing stale
-    assert(got.inputFiles.forall(_.contains("-merge/")))
+    assert(opened(got).forall(mergeFiles))
   }
 
   test("time travel to a pre-merge seq shows pre-merge rows exactly") {
@@ -143,11 +145,11 @@ class MergeSpec extends AnyFunSuite {
     threeGens(store)
     store.merge("t", Seq(("6x0153", -153L), ("zz", 1L)).toDF("id", "v"), Seq("id"))
     val before = rows(store.read("t").get)
-    store.compact("t")
+    val compFiles = added(store, "t")(store.compact("t"))
     assert(store.history("t").last._2 == "comp")
     assert(rows(store.read("t").get) == before)
     // post-compaction chain has no tombstones in play: whole-dir reads
-    assert(store.read("t").get.inputFiles.forall(_.contains("-comp")))
+    assert(opened(store.read("t").get).forall(compFiles))
   }
 
   test("merge on a partitioned table preserves the layout") {
@@ -156,13 +158,14 @@ class MergeSpec extends AnyFunSuite {
       partitioning = Map("t" -> Seq("ds")))
     store.append("t", Seq(("a", 1L, "d1"), ("b", 2L, "d2"), ("c", 3L, "d1"))
       .toDF("id", "v", "ds"))
-    store.merge("t", Seq(("a", -1L, "d1")).toDF("id", "v", "ds"), Seq("id"))
+    val mergeFiles = added(store, "t")(
+      store.merge("t", Seq(("a", -1L, "d1")).toDF("id", "v", "ds"), Seq("id")))
     val got = store.read("t").get
     assert(got.as[(String, Long, String)].collect().toSet ==
       Set(("a", -1L, "d1"), ("b", 2L, "d2"), ("c", 3L, "d1")))
     // the merge generation is itself partition-laid-out
-    assert(store.read("t").get.inputFiles
-      .filter(_.contains("-merge")).forall(_.contains("ds=")))
+    assert(opened(store.read("t").get)
+      .filter(mergeFiles).forall(_.contains("ds=")))
   }
 
   test("merge into an empty table is an append") {
@@ -186,7 +189,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("tombstone serialization roundtrip; corrupt line fails loudly") {
-    val m = Map("g0000001-delta" -> Set("part-1.parquet", "ds=a/part-2.parquet"))
+    val m = Map("_data-0001" -> Set("part-1.parquet", "ds=a/part-2.parquet"))
     assert(TableStore.parseReplaces(TableStore.serializeReplaces(m)) == m)
     intercept[IllegalStateException] {
       TableStore.parseReplaces("only-one-field\n")

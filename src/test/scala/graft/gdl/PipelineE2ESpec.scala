@@ -182,26 +182,22 @@ class PipelineE2ESpec extends AnyFunSuite {
   }
 
   test("status updates are O(1) delta appends, not history rewrites") {
-    def executionGens(tables: String): Seq[String] = {
-      val d = new java.io.File(tables, "import_executions")
-      Option(d.listFiles()).fold(Seq.empty[String])(
-        _.map(_.getName).filter(_.startsWith("g")).sorted.toSeq)
-    }
     val tables = java.nio.file.Files.createTempDirectory("gdl-tables").toString
     val storage = java.nio.file.Files.createTempDirectory("gdl-storage").toString
     val store = new TableStore(spark, tables)
+    def executionGens(): Seq[(Long, String)] = store.history("import_executions")
     val pipeline = new ImportPipeline(spark, store,
       new InMemoryUrlReader(stacGraph()), storage, new Random(42))
     val ds = pipeline.datasets.create("Delta_Cost", t0).toOption.get
 
     pipeline.run(ds.id, "s3://staging/data/catalog.json", t0.plusSeconds(60))
-    val afterFirst = executionGens(tables).size
+    val afterFirst = executionGens().size
     pipeline.run(ds.id, "s3://staging/data/catalog.json", t0.plusSeconds(120))
-    val afterSecond = executionGens(tables).size
+    val afterSecond = executionGens().size
     // per-run commit cost is constant (start + completion deltas) and
     // independent of how many executions already exist
     assert(afterFirst == 2 && afterSecond == 4)
-    assert(executionGens(tables).forall(_.endsWith("-delta")))
+    assert(executionGens().forall(_._2 == "delta"))
     // last-wins resolution sees exactly one (terminal) row per execution
     val latest = store.readLatestBy("import_executions",
       Seq("execution_id"), "state_seq").get

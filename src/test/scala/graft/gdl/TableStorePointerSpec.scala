@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * of `_temporary`) are allowed: production object-store deployments
   * replace those with a rename-free committer, and they never affect
   * COMMIT atomicity — visibility is gated solely on the pointer file.
-  * Any rename at the publish level (the old `_tmp-` → `g<seq>-kind`
-  * claim) throws, so the rename-based protocol CANNOT pass here. */
+  * Any rename at the publish level throws, so a rename-based publish
+  * CANNOT pass here. */
 class NoPublishRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "norename"
   override def getUri: java.net.URI = java.net.URI.create("norename:///")
@@ -62,8 +62,7 @@ class TableStorePointerSpec extends AnyFunSuite {
 
   test("full lifecycle commits without any publish-level rename") {
     val root = newRoot("store-ptr")
-    val store = new TableStore(spark, root, autoCompactDeltas = 1000,
-      pointerCommits = true)
+    val store = new TableStore(spark, root, autoCompactDeltas = 1000)
     (1 to 4).foreach(i => store.append("t", Seq(i).toDF("x")))
     assert(store.read("t").get.as[Int].collect().sorted.toSeq == (1 to 4))
     // minor compaction (fold), then major (comp)
@@ -88,8 +87,7 @@ class TableStorePointerSpec extends AnyFunSuite {
 
   test("merge and deleteWhere publish tombstones through pointers") {
     val root = newRoot("store-ptr-merge")
-    val store = new TableStore(spark, root, autoCompactDeltas = 1000,
-      pointerCommits = true)
+    val store = new TableStore(spark, root, autoCompactDeltas = 1000)
     store.append("t", Seq((1, "a"), (2, "b")).toDF("k", "v"))
     store.merge("t", Seq((2, "B"), (3, "c")).toDF("k", "v"), Seq("k"))
     assert(store.read("t").get.as[(Int, String)].collect().sorted.toSeq
@@ -102,9 +100,9 @@ class TableStorePointerSpec extends AnyFunSuite {
   test("racing appends and compactions: create-exclusive slots, no loss") {
     val root = newRoot("store-ptr-race")
     val a = new TableStore(spark, root, autoCompactDeltas = 1000,
-      gcGraceMs = 0L, pointerCommits = true)
+      gcGraceMs = 0L)
     val b = new TableStore(spark, root, autoCompactDeltas = 1000,
-      gcGraceMs = 0L, pointerCommits = true)
+      gcGraceMs = 0L)
     a.append("t", Seq(0).toDF("x"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: scala.concurrent.ExecutionContext =
@@ -126,7 +124,7 @@ class TableStorePointerSpec extends AnyFunSuite {
 
   test("a torn pointer at the next slot does not wedge appends") {
     val root = newRoot("store-ptr-torn")
-    val store = new TableStore(spark, root, pointerCommits = true)
+    val store = new TableStore(spark, root)
     store.append("t", Seq(1).toDF("x"))
     // a torn (unparseable) pointer already sits at the NEXT slot — too
     // fresh for the gc grace, so it might equally be a rival MID-WRITE
@@ -148,8 +146,7 @@ class TableStorePointerSpec extends AnyFunSuite {
 
   test("an aged torn pointer at the next slot is reclaimed in place") {
     val root = newRoot("store-ptr-torn-aged")
-    val store = new TableStore(spark, root, gcGraceMs = 60L * 1000,
-      pointerCommits = true)
+    val store = new TableStore(spark, root, gcGraceMs = 60L * 1000)
     store.append("t", Seq(1).toDF("x"))
     val f = hadoopFs(root)
     val local = root.stripPrefix("norename:")
@@ -171,8 +168,7 @@ class TableStorePointerSpec extends AnyFunSuite {
     spark.sparkContext.hadoopConfiguration.set(
       "fs.noread.impl", classOf[PoisonReadFileSystem].getName)
     PoisonReadFileSystem.poison = ""
-    val store = new TableStore(spark, root, gcGraceMs = 0L,
-      pointerCommits = true)
+    val store = new TableStore(spark, root, gcGraceMs = 0L)
     val f = hadoopFs(root)
     try {
       store.append("t", Seq(1).toDF("x")) // g0
@@ -189,8 +185,7 @@ class TableStorePointerSpec extends AnyFunSuite {
       // is required: the committing store's pointer cache would mask
       // the fault.
       PoisonReadFileSystem.poison = "g0000001"
-      val cold = new TableStore(spark, root, gcGraceMs = 0L,
-        pointerCommits = true)
+      val cold = new TableStore(spark, root, gcGraceMs = 0L)
       cold.append("t", Seq(3).toDF("x")) // must step past the slot
       cold.gc("t")
       assert(f.exists(new Path(root, "t/_commits/g0000001")),
@@ -199,7 +194,7 @@ class TableStorePointerSpec extends AnyFunSuite {
         "gc must never reclaim the data dir an unreadable pointer references")
       // the fault heals → the hidden generation comes straight back
       PoisonReadFileSystem.poison = ""
-      assert(new TableStore(spark, root, pointerCommits = true)
+      assert(new TableStore(spark, root)
         .read("t").get.as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
     } finally PoisonReadFileSystem.poison = ""
   }
@@ -216,8 +211,7 @@ class TableStorePointerSpec extends AnyFunSuite {
     spark.sparkContext.hadoopConfiguration.set(
       "fs.noread.impl", classOf[PoisonReadFileSystem].getName)
     PoisonReadFileSystem.poison = ""
-    val store = new TableStore(spark, root, gcGraceMs = 0L,
-      pointerCommits = true)
+    val store = new TableStore(spark, root, gcGraceMs = 0L)
     val f = hadoopFs(root)
     try {
       store.append("t", Seq(1).toDF("x")) // g0
@@ -226,8 +220,7 @@ class TableStorePointerSpec extends AnyFunSuite {
       // cold stores: the committing store's pointer cache would mask
       // the fault (and with the hidden gen in its snapshot, compacting
       // WOULD be safe — the gate keys off visibility, not the fault)
-      def cold() = new TableStore(spark, root, gcGraceMs = 0L,
-        pointerCommits = true)
+      def cold() = new TableStore(spark, root, gcGraceMs = 0L)
       val c = cold()
       c.append("t", Seq(3).toDF("x")) // steps past the blocked slot → g2
       // the visible chain is [g0, g2]; a comp/fold above it would hide
@@ -255,8 +248,7 @@ class TableStorePointerSpec extends AnyFunSuite {
 
   test("gc reclaims aged orphan stages and torn pointers, never live data") {
     val root = newRoot("store-ptr-gc")
-    val store = new TableStore(spark, root, gcGraceMs = 60L * 1000,
-      pointerCommits = true)
+    val store = new TableStore(spark, root, gcGraceMs = 60L * 1000)
     store.append("t", Seq(1).toDF("x"))
     val f = hadoopFs(root)
     val local = root.stripPrefix("norename:")
@@ -287,8 +279,7 @@ class TableStorePointerSpec extends AnyFunSuite {
     // a list has snapshot isolation until gc.
     val local = java.nio.file.Files.createTempDirectory("store-interop")
       .toString
-    val store = new TableStore(spark, local, autoCompactDeltas = 1000,
-      pointerCommits = true)
+    val store = new TableStore(spark, local, autoCompactDeltas = 1000)
     store.append("t", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"))
     store.merge("t", Seq((2L, "B"), (4L, "d")).toDF("k", "v"), Seq("k"))
     val snap1 = store.snapshotFileList("t").get

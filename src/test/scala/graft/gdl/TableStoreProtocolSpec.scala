@@ -1,53 +1,20 @@
 package graft.gdl
 
 import graft.TestSpark
-import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Commit/read protocol edges surfaced by review: the rename-nesting
-  * lost race, partial-history time travel, and the vacuumed-snapshot
-  * change feed. Every failure here was a SILENT wrong answer before the
-  * guards existed. */
+/** Commit/read protocol edges surfaced by review: racing writers on
+  * the create-exclusive slot, partial-history time travel, the
+  * vacuumed-snapshot change feed and the gc grace clock. Every failure
+  * here was a SILENT wrong answer before the guards existed. */
 class TableStoreProtocolSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def hadoopFs(root: String) =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  test("racing writers on the same slot: rename nests, commit recovers, no rows lost") {
-    // Hadoop rename onto an EXISTING dir returns true and moves the
-    // source INSIDE it (probed on the local fs too); under enough
-    // same-slot races the loser's data would land in an invisible
-    // "_tmp-" subdir and vanish. Hammer the window from two writer
-    // instances and assert the loss-free invariants.
-    val root = java.nio.file.Files.createTempDirectory("store-race").toString
-    val a = new TableStore(spark, root, autoCompactDeltas = 1000)
-    val b = new TableStore(spark, root, autoCompactDeltas = 1000)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    val n = 14
-    val fa = Future { (1 to n).foreach(i => a.append("t", Seq(i).toDF("x"))) }
-    val fb = Future { (1 to n).foreach(i => b.append("t", Seq(100 + i).toDF("x"))) }
-    Await.result(Future.sequence(Seq(fa, fb)), 300.seconds)
-    pool.shutdown()
-    // every appended row is readable
-    assert(a.read("t").get.as[Int].collect().sorted.toSeq ==
-      ((1 to n) ++ (101 to 100 + n)).sorted)
-    // and no generation hides a nested staged dir (the lost-race marker)
-    val f = hadoopFs(root)
-    val nested = f.listStatus(new Path(root, "t")).filter(_.isDirectory)
-      .flatMap(g => f.listStatus(g.getPath))
-      .filter(_.getPath.getName.startsWith("_tmp-"))
-    assert(nested.isEmpty, nested.map(_.getPath).mkString(", "))
-  }
+  import StoreFiles.{age, drop, generation}
 
   test("appends racing explicit folds never lose rows") {
     // foldDeltas commits under the expected-slot guard: a delta landing
-    // between its snapshot and its rename must surface in every read —
+    // between its snapshot and its publish must surface in every read —
     // the fold retries or gives up, it never swallows the delta.
     val root = java.nio.file.Files.createTempDirectory("store-foldrace").toString
     val a = new TableStore(spark, root, autoCompactDeltas = 1000)
@@ -72,7 +39,7 @@ class TableStoreProtocolSpec extends AnyFunSuite {
   test("appends racing FULL compactions never lose rows or bury deltas") {
     // compact() snapshots live generations and claims the next slot
     // under the expected-seq guard; a delta committed between snapshot
-    // and rename must either push the compaction to retry/forfeit or
+    // and publish must either push the compaction to retry/forfeit or
     // land ABOVE the new full generation — a delta below a full gen
     // that excludes it would be hidden from read() and eligible for
     // gc: silent row loss. Hammer the window and assert the union.
@@ -93,12 +60,11 @@ class TableStoreProtocolSpec extends AnyFunSuite {
     // every row survives, through either store instance
     assert(a.read("t").get.as[Int].collect().sorted.toSeq == (0 to n))
     assert(b.read("t").get.as[Int].collect().sorted.toSeq == (0 to n))
-    // and no generation hides a nested staged dir (the lost-race marker)
-    val f = hadoopFs(root)
-    val nested = f.listStatus(new Path(root, "t")).filter(_.isDirectory)
-      .flatMap(g => f.listStatus(g.getPath))
-      .filter(_.getPath.getName.startsWith("_tmp-"))
-    assert(nested.isEmpty, nested.map(_.getPath).mkString(", "))
+    // and no staged dir was published twice (a lost race retried after
+    // its pointer landed): every generation names its own live data
+    val gens = a.history("t").map(g => generation(root, "t", g._1))
+    assert(gens.map(_.data).distinct.size == gens.size, gens.mkString(", "))
+    assert(gens.forall(_.exists), gens.filterNot(_.exists).mkString(", "))
   }
 
   test("two compactors racing each other leave one consistent table") {
@@ -117,31 +83,6 @@ class TableStoreProtocolSpec extends AnyFunSuite {
     assert(a.read("t").get.as[Int].collect().sorted.toSeq == (1 to 6))
   }
 
-  test("same-slot duplicate generations resolve deterministically; gc reclaims the loser") {
-    // The atomic rename claims a NAME, so an append (g<N>-delta) and a
-    // maintenance writer (g<N>-comp) CAN both land the same slot —
-    // name-claiming cannot prevent it. The protocol's answer: every
-    // reader resolves the tie to the data-bearing kind (snapshot-
-    // guarded kinds rank after free kinds), the losing writer
-    // withdraws, and gc reclaims a loser that crashed mid-withdrawal.
-    // Forge the crashed-loser state directly and assert both halves.
-    val root = java.nio.file.Files.createTempDirectory("store-dup").toString
-    val store = new TableStore(spark, root, gcGraceMs = 0L)
-    store.append("t", Seq(1).toDF("x"))   // g0-delta
-    store.append("t", Seq(2).toDF("x"))   // g1-delta
-    val f = hadoopFs(root)
-    // a crashed compactor "claimed" slot 1 too, with STALE content
-    // (the snapshot that only saw row 1)
-    val forged = new Path(root, "t/g0000001-comp")
-    Seq(1).toDF("x").write.parquet(forged.toString)
-    // reads must resolve slot 1 to the delta — row 2 never vanishes
-    assert(store.read("t").get.as[Int].collect().sorted.toSeq == Seq(1, 2))
-    // gc (grace 0) reclaims the loser; the winner chain is untouched
-    store.gc("t")
-    assert(!f.exists(forged), "crashed same-slot loser must be reclaimed")
-    assert(store.read("t").get.as[Int].collect().sorted.toSeq == Seq(1, 2))
-  }
-
   test("readAt refuses a partial delta chain left by gc stragglers") {
     val root = java.nio.file.Files.createTempDirectory("store-straggler").toString
     val store = new TableStore(spark, root)
@@ -149,9 +90,8 @@ class TableStoreProtocolSpec extends AnyFunSuite {
     store.append("t", Seq(2).toDF("x")) // g1
     store.append("t", Seq(3).toDF("x")) // g2
     // simulate gc deleting g0/g1 while the grace period kept g2
-    val f = hadoopFs(root)
-    f.delete(new Path(root, "t/g0000000-delta"), true)
-    f.delete(new Path(root, "t/g0000001-delta"), true)
+    drop(root, "t", 0L)
+    drop(root, "t", 1L)
     // the surviving chain {g2} must not masquerade as "the table at seq 2"
     intercept[TableStore.VacuumedHistoryException](store.readAt("t", 2L))
   }
@@ -160,9 +100,7 @@ class TableStoreProtocolSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("store-vacfeed").toString
     val store = new TableStore(spark, root)
     (1 to 4).foreach(i => store.append("t", Seq(i).toDF("x"))) // g0..g3
-    val f = hadoopFs(root)
-    (0 to 2).foreach(i =>
-      f.delete(new Path(root, f"t/g$i%07d-delta"), true))
+    (0 to 2).foreach(i => drop(root, "t", i.toLong))
     // reader checkpointed 0, snapshotted 2: everything <= 2 is gone
     intercept[TableStore.VacuumedHistoryException](
       store.readChangesSince("t", 0L, untilSeq = 2L))
@@ -171,42 +109,40 @@ class TableStoreProtocolSpec extends AnyFunSuite {
   }
 
   test("gc spares comp-superseded generations until the comp itself ages past the grace") {
-    // Review finding (r8, high): the superseded-by-full gc branch
-    // measured the SUPERSEDED generations' own mtimes — arbitrarily old
-    // on any long-lived table — so a comp's in-commit gc deleted the
-    // pre-comp chain the instant the comp committed, inside the window
-    // where a racing append can still steal the comp's slot (free kinds
-    // win slot ties). The supersession clock must be the full
-    // generation's OWN commit time, mirroring the fold rule.
+    // The supersession clock is the full generation's OWN commit time,
+    // mirroring the fold rule: the superseded generations' own mtimes
+    // are arbitrarily old on any long-lived table, and measuring them
+    // would let a comp's in-commit gc delete the pre-comp chain the
+    // instant the comp committed — under a reader that listed it a
+    // moment earlier.
     val root = java.nio.file.Files.createTempDirectory("store-compage").toString
     val store = new TableStore(spark, root, gcGraceMs = 60L * 1000)
     (1 to 3).foreach(i => store.append("t", Seq(i).toDF("x"))) // g0..g2
     // age the deltas far past the grace (the long-lived-table state)
     val old = System.currentTimeMillis() - 3600L * 1000
-    (0 to 2).foreach(i =>
-      new java.io.File(f"$root/t/g$i%07d-delta").setLastModified(old))
+    (0 to 2).foreach(i => age(root, "t", i.toLong, old))
+    val pre = (0 to 2).map(i => generation(root, "t", i.toLong))
     store.compact("t") // g3-comp, fresh mtime; runs gc in-commit
-    val f = hadoopFs(root)
-    (0 to 2).foreach(i =>
-      assert(f.exists(new Path(root, f"t/g$i%07d-delta")),
-        s"pre-comp g$i must survive gc while the comp is inside the grace"))
+    pre.zipWithIndex.foreach { case (g, i) =>
+      assert(g.exists,
+        s"pre-comp g$i must survive gc while the comp is inside the grace") }
     assert(store.read("t").get.as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
     // once the comp itself ages past the grace, the originals go
-    assert(new java.io.File(s"$root/t/g0000003-comp").setLastModified(old))
+    assert(store.history("t").last == ((3L, "comp")))
+    age(root, "t", 3L, old)
     store.gc("t")
-    (0 to 2).foreach(i =>
-      assert(!f.exists(new Path(root, f"t/g$i%07d-delta")),
-        s"aged-comp-superseded g$i must be reclaimed"))
+    pre.zipWithIndex.foreach { case (g, i) =>
+      assert(g.gone, s"aged-comp-superseded g$i must be reclaimed") }
     assert(store.read("t").get.as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
   }
 
   test("appends racing compactions under zero grace never lose pre-comp rows") {
-    // The full r8-review scenario: with gcGraceMs=0 a comp's in-commit
-    // gc reclaims the pre-comp chain as soon as the comp ages at all,
-    // so an append that steals the comp's slot (listed before the comp
-    // landed, renamed after) would orphan the table. The free writer
-    // now YIELDS a slot holding a snapshot-kind rival instead of
-    // outranking it; hammer the window and assert nothing is lost.
+    // With gcGraceMs=0 a comp's in-commit gc reclaims the pre-comp
+    // chain as soon as the comp ages at all, so an append that landed
+    // in the comp's slot (listed before the comp, published after)
+    // would orphan the table. The create-exclusive pointer gives the
+    // slot to exactly one of them and the other moves on; hammer the
+    // window and assert nothing is lost.
     val root = java.nio.file.Files.createTempDirectory("store-steal").toString
     val a = new TableStore(spark, root, autoCompactDeltas = 1000, gcGraceMs = 0L)
     val b = new TableStore(spark, root, autoCompactDeltas = 1000, gcGraceMs = 0L)

@@ -11,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ZoneMapSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+  import StoreFiles.{added, dirsOf, opened}
 
   private def freshStore() = new TableStore(spark,
     java.nio.file.Files.createTempDirectory("zonemap").toString,
@@ -19,19 +20,27 @@ class ZoneMapSpec extends AnyFunSuite {
   private def rows(df: DataFrame) =
     df.as[(Long, String)].collect().toSet
 
-  private def threeGens(store: TableStore): Unit = {
-    store.append("t", (0L until 100L).map(i => (i, s"a$i")).toDF("id", "s"))
-    store.append("t", (100L until 200L).map(i => (i, s"b$i")).toDF("id", "s"))
-    store.append("t", (200L until 300L).map(i => (i, s"c$i")).toDF("id", "s"))
-  }
+  /** Three delta generations; returns each one's files. */
+  private def threeGens(store: TableStore): Seq[Set[String]] =
+    Seq("a" -> 0L, "b" -> 100L, "c" -> 200L).map { case (p, lo) =>
+      added(store, "t")(store.append("t",
+        (lo until lo + 100L).map(i => (i, s"$p$i")).toDF("id", "s")))
+    }
+
+  /** Delete the zone map of the generation holding `files`. */
+  private def dropZoneMap(files: Set[String]): Unit =
+    dirsOf(files).foreach { d =>
+      val zm = new Path(d, TableStore.zoneMapFile)
+      zm.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(zm, false)
+    }
 
   test("range probe reads only the overlapping generation") {
     val store = freshStore()
-    threeGens(store)
+    val gens = threeGens(store)
     assert(store.zoneSkipCount("t", "id", 120L, 150L) == 2)
     val got = store.readRange("t", "id", 120L, 150L).get
     // only generation 1's files are opened
-    assert(got.inputFiles.forall(_.contains("g0000001")))
+    assert(opened(got).forall(gens(1)))
     assert(rows(got) ==
       rows(store.read("t").get.filter($"id".between(120L, 150L))))
   }
@@ -56,16 +65,10 @@ class ZoneMapSpec extends AnyFunSuite {
 
   test("a generation without a zone map is always read (safety)") {
     val store = freshStore()
-    val root = {
-      // recover the store root from the table's file listing
-      val f = store.read("t0"); f // no-op; root not exposed — write then look
-      store.append("t", Seq((1L, "x")).toDF("id", "s"))
-      store.append("t", Seq((500L, "y")).toDF("id", "s"))
-      new Path(store.read("t").get.inputFiles.head).getParent.getParent.getParent
-    }
+    val g0 = added(store, "t")(store.append("t", Seq((1L, "x")).toDF("id", "s")))
+    store.append("t", Seq((500L, "y")).toDF("id", "s"))
     // delete generation 0's zone map: it must become un-skippable
-    val g0 = new Path(root, "t/g0000000-delta/_zonemap.tsv")
-    g0.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(g0, false)
+    dropZoneMap(g0)
     assert(store.zoneSkipCount("t", "id", 400L, 600L) == 0)
     assert(rows(store.readRange("t", "id", 400L, 600L).get) == Set((500L, "y")))
   }
@@ -90,11 +93,8 @@ class ZoneMapSpec extends AnyFunSuite {
     // read(t).filter(...), not throw AnalysisException.
     val store = freshStore()
     store.append("t", Seq((1L, "x", 7L)).toDF("id", "s", "v"))
-    store.append("t", Seq((2L, "y")).toDF("id", "s"))
-    val root = new Path(store.read("t").get.inputFiles.head)
-      .getParent.getParent.getParent
-    val g1 = new Path(root, "t/g0000001-delta/_zonemap.tsv")
-    g1.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(g1, false)
+    dropZoneMap(added(store, "t")(
+      store.append("t", Seq((2L, "y")).toDF("id", "s"))))
     val got = store.scan("t", $"v".between(1000L, 2000L)).get
     assert(got.isEmpty)
     assert(got.columns.toSet == Set("id", "s", "v"))
@@ -134,13 +134,13 @@ class ZoneMapSpec extends AnyFunSuite {
 
   test("scan prunes from a compound predicate and keeps full filter semantics") {
     val store = freshStore()
-    threeGens(store)
+    val gens = threeGens(store)
     // id range + string equality: both conjuncts prune; the modulo
     // conjunct contributes nothing but still filters rows
     val pred = $"id".between(120L, 150L) && $"s" > "b" && $"id" % 2 === 0
     assert(store.zoneSkipCount("t", pred) == 2)
     val got = store.scan("t", pred).get
-    assert(got.inputFiles.forall(_.contains("g0000001")))
+    assert(opened(got).forall(gens(1)))
     assert(rows(got) == rows(store.read("t").get.filter(pred)))
     assert(rows(got).nonEmpty)
   }
@@ -282,13 +282,13 @@ class ZoneMapSpec extends AnyFunSuite {
 
   test("filtered change feed prunes delta files and keeps the protocol") {
     val store = freshStore()
-    threeGens(store)
+    val gens = threeGens(store)
     // consumer checkpointed at g0; wants only ids >= 200 → g1 (100-199)
     // is provably disjoint and never opened
     val pred = $"id" >= 200L
     val feed = store.readChangesSinceWhere("t", 0L, pred).get
     assert(rows(feed) == rows(store.readChangesSince("t", 0L).get.filter(pred)))
-    assert(feed.inputFiles.forall(_.contains("g0000002")))
+    assert(opened(feed).forall(gens(2)))
     // pruning must not mask protocol failures: an overwrite still throws
     store.overwrite("t", Seq((999L, "z")).toDF("id", "s"))
     intercept[TableStore.FullRefreshRequiredException](

@@ -14,7 +14,7 @@ allowMissingColumns read). hive_partitioning: layout columns live in
 
 Usage:
   duckdb_snapshot_read.py FILELIST.txt            # count + order-free hash
-  duckdb_snapshot_read.py FILELIST.txt 'SQL'      # run SQL against `snap`
+  duckdb_snapshot_read.py FILELIST.txt 'SQL'      # first column of SQL over `snap`
 
 The default output is the row count and a commutative content hash
 (sum of per-row md5 slices — the repo's order-free fingerprint idiom),
@@ -33,7 +33,7 @@ def main():
         f"{files!r}, union_by_name=true, hive_partitioning=true)")
     if len(sys.argv) > 2:
         for row in con.execute(sys.argv[2]).fetchall():
-            print(row)
+            print(row[0])
         return
     n, h = con.execute(
         """SELECT CAST(count(*) AS BIGINT),
