@@ -75,9 +75,12 @@ object IndexStress {
     val pred = col("cell").isin(cells: _*)
     val (ak, at) = vstore.scanFileCounts("ann_e0_assign", pred)
     val (ck, ct) = vstore.scanFileCounts("ann_e0_codes", pred)
-    // zone-only counterpart: what the [min,max] range of the IN list
-    // alone would keep (the Bloom's exact membership is the difference)
-    val (zk, zt) = vstore.zoneFileCounts("ann_e0_assign", pred)
+    // zone-only counterpart: the [min,max] range of the probed cells —
+    // a range predicate, which no Bloom sidecar answers (the Bloom's
+    // exact membership is the difference)
+    val cellIds = cells.map(_.asInstanceOf[Long])
+    val (zk, zt) = vstore.scanFileCounts("ann_e0_assign",
+      col("cell").between(cellIds.min, cellIds.max))
     println(s"""{"probed_cells":${cells.size},"search_rows":$hits,""" +
       s""""assign_files":[$ak,$at],"codes_files":[$ck,$ct],""" +
       s""""assign_zone_only":[$zk,$zt]}""")

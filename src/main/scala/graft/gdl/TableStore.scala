@@ -1,8 +1,10 @@
 package graft.gdl
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, desc, row_number}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.functions.{coalesce, col, desc, input_file_name, lit,
+  row_number}
 
 /** Parquet-backed table store with atomic, generation-versioned commits —
   * the engine's replacement for the reference's three DynamoDB tables
@@ -279,52 +281,59 @@ class TableStore(spark: SparkSession, root: String,
     if (lastFull >= 0) gens.drop(lastFull) else gens
   }
 
-  /** The union of replace-lists carried by the chain's merge
-    * generations: generation-dir-name → its files REWRITTEN by a later
-    * row-level [[merge]]/[[deleteWhere]] (tombstoned, must not be
-    * read). Only merges INSIDE the passed chain apply — which is what
+  /** A generation chain with its tombstones resolved once: `gone(g)` are
+    * g's files a row-level [[merge]]/[[deleteWhere]] rewrote (they must
+    * not be read). Only merges INSIDE the chain apply — which is what
     * makes [[readAt]] time travel exact for free. */
-  private def replacedIn(gens: Seq[(Long, String, Path)]): Map[String, Set[String]] =
-    gens.filter(_._2 == TableStore.mergeKind)
-      .map(g => readReplaces(g._3))
-      .foldLeft(Map.empty[String, Set[String]]) { (acc, m) =>
-        m.foldLeft(acc) { case (a, (k, v)) =>
-          a.updated(k, a.getOrElse(k, Set.empty) ++ v) }
-      }
+  private final class Chain(val gens: Seq[(Long, String, Path)]) {
+    private val replaced: Map[String, Set[String]] =
+      gens.filter(_._2 == TableStore.mergeKind).flatMap(g => readReplaces(g._3))
+        .groupMapReduce(_._1)(_._2)(_ ++ _)
+
+    def gone(g: (Long, String, Path)): Set[String] =
+      replaced.getOrElse(g._3.getName, Set.empty)
+
+    /** The chain's rows. The last generation can never be tombstoned by
+      * anything inside the chain, so the parts are non-empty whenever
+      * `gens` is. Schema evolution: a generation written before a column
+      * existed reads as null for that column (old and new generations
+      * stay jointly readable; consumers of evolved columns coalesce
+      * defaults). */
+    lazy val table: DataFrame =
+      gens.flatMap(g => readGeneration(g, gone(g)))
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+
+    /** The chain's data files as absolute paths, in generation order. */
+    def files: Seq[String] = gens.flatMap { g =>
+      listDataFiles(g._3).filterNot(gone(g)).sorted
+        .map(f => new Path(g._3, f).toString)
+    }
+  }
 
   /** One generation's surviving contents: a whole-dir read when none of
     * its files were tombstoned (fast path — normal partition
-    * discovery), an explicit file list under the generation's basePath
-    * otherwise (so `col=value/` partition columns still resolve), None
-    * when every file was rewritten away. */
+    * discovery), an explicit file list otherwise, None when every file
+    * was rewritten away. */
   private def readGeneration(g: (Long, String, Path),
                              gone: Set[String]): Option[DataFrame] =
     if (gone.isEmpty) Some(spark.read.parquet(g._3.toString))
-    else {
-      val surviving = listDataFiles(g._3).filterNot(gone)
-      if (surviving.isEmpty) None
-      else Some(spark.read.option("basePath", g._3.toString)
-        .parquet(surviving.sorted.map(f => new Path(g._3, f).toString): _*))
-    }
+    else readFiles(g._3, listDataFiles(g._3).filterNot(gone))
 
-  private def readGenerations(gens: Seq[(Long, String, Path)]): DataFrame = {
-    val replaced = replacedIn(gens)
-    // the chain's last generation can never be tombstoned by anything
-    // inside the chain, so the parts are non-empty whenever gens is
-    gens.flatMap(g => readGeneration(g, replaced.getOrElse(g._3.getName, Set.empty)))
-      // schema evolution: a generation written before a column existed
-      // reads as null for that column (old and new generations stay
-      // jointly readable; consumers of evolved columns coalesce defaults)
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-  }
+  /** Generation-relative `files` of generation dir `gen`, read under its
+    * basePath so `col=value/` partition columns still resolve; None for
+    * no files. */
+  private def readFiles(gen: Path, files: Iterable[String]): Option[DataFrame] =
+    if (files.isEmpty) None
+    else Some(spark.read.option("basePath", gen.toString)
+      .parquet(files.toSeq.sorted.map(f => new Path(gen, f).toString): _*))
 
   /** Current table contents, or None if never written. */
   def read(table: String): Option[DataFrame] = {
     val gens = liveGenerations(table)
-    if (gens.isEmpty) None else Some(readGenerations(gens))
+    if (gens.isEmpty) None else Some(new Chain(gens).table)
   }
 
-  /** THE INTEROP CONTRACT (r14 VERDICT #8): the current snapshot as a
+  /** THE INTEROP CONTRACT: the current snapshot as a
     * plain list of absolute parquet file paths — exactly the files
     * [[read]] unions, in generation order with merge tombstones
     * excluded. Any engine that reads parquet reads a pointer-committed
@@ -343,13 +352,7 @@ class TableStore(spark: SparkSession, root: String,
     * [[readAt]] gives Spark readers, extended to foreign engines. */
   def snapshotFileList(table: String): Option[Seq[String]] = {
     val gens = liveGenerations(table)
-    if (gens.isEmpty) return None
-    val replaced = replacedIn(gens)
-    Some(gens.flatMap { g =>
-      val gone = replaced.getOrElse(g._3.getName, Set.empty)
-      listDataFiles(g._3).filterNot(gone).sorted
-        .map(f => new Path(g._3, f).toString)
-    })
+    if (gens.isEmpty) None else Some(new Chain(gens).files)
   }
 
   /** Time travel: the table as of generation `seq` (inclusive) — the
@@ -390,7 +393,7 @@ class TableStore(spark: SparkSession, root: String,
           "survive (gc'd, or superseded by a fold covering past the " +
           "requested point); history was vacuumed")
       case Right(chain) =>
-        Some(readGenerations(base ++ chain.collect { case (g, true) => g }))
+        Some(new Chain(base ++ chain.collect { case (g, true) => g }).table)
     }
   }
 
@@ -424,7 +427,7 @@ class TableStore(spark: SparkSession, root: String,
                        untilSeq: Long = Long.MaxValue): Option[DataFrame] =
     changeDeltas(table, sinceSeq, untilSeq) match {
       case None => None
-      case Some(deltas) if deltas.nonEmpty => Some(readGenerations(deltas))
+      case Some(deltas) if deltas.nonEmpty => Some(new Chain(deltas).table)
       case _ => read(table).map(_.limit(0)) // no changes: empty, schema kept
     }
 
@@ -435,13 +438,12 @@ class TableStore(spark: SparkSession, root: String,
     * stream and reads O(its own new files)). Same protocol failures as
     * the unfiltered feed: skipping is not allowed to hide an overwrite
     * or a vacuum. */
-  def readChangesSinceWhere(table: String, sinceSeq: Long,
-                            predicate: org.apache.spark.sql.Column,
+  def readChangesSinceWhere(table: String, sinceSeq: Long, predicate: Column,
                             untilSeq: Long = Long.MaxValue): Option[DataFrame] =
     changeDeltas(table, sinceSeq, untilSeq) match {
       case None => None
       case Some(deltas) if deltas.nonEmpty =>
-        Some(readGenerationsWhere(deltas, predicate))
+        Some(readWhere(new Chain(deltas), predicate))
       case _ => read(table).map(_.filter(predicate).limit(0))
     }
 
@@ -496,41 +498,29 @@ class TableStore(spark: SparkSession, root: String,
     Some(chain.collect { case (g, true) => g })
   }
 
-  def isEmptyTable(table: String): Boolean = read(table).forall(_.isEmpty)
-
-  /** Zone-map read: the table filtered to `lo ≤ column ≤ hi` (inclusive,
-    * null-excluding — the filter still runs on whatever is read), but
-    * generations whose recorded [min, max] for `column` cannot overlap
-    * the range are skipped WITHOUT opening their files — the same
-    * file-skipping that makes Delta/Iceberg point reads O(matching
-    * files) instead of O(table). Combined with a layout that clusters
-    * the column (partitionBy, or [[graft.functions.ZOrderExpr]]-sorted
-    * writes), a 100 TB table answers a key-range probe from the handful
-    * of generations whose zones intersect it.
+  /** The table filtered by `predicate`, opening only the FILES the
+    * generations' sidecars cannot rule out — the file skipping that
+    * makes Delta/Iceberg point reads O(matching files) instead of
+    * O(table). The column-vs-literal conjuncts of the analyzed predicate
+    * (=, <, <=, >, >=, BETWEEN, IN, `<=>` a non-null literal; the literal
+    * on either side) are checked as ranges against the per-file zone
+    * maps and as equalities against the Bloom sketches of the table's
+    * `bloomColumns`; anything else (OR, NOT, expressions over the column)
+    * prunes nothing, and strict bounds relax to inclusive. The FULL
+    * predicate filters whatever is read, so the result is exactly
+    * `read(table).filter(predicate)`. With a layout that clusters the
+    * column (partitionBy, or [[rewriteClustered]] by a
+    * [[graft.functions.ZOrderExpr]] key) a 100 TB table answers a
+    * key-range probe from the few files whose zones intersect it.
     *
     * Safety over speed: a generation with no stats file (older writer,
     * stats write failed) is always read; a column recorded as
-    * unsupported-for-stats is never used to skip; a column absent from
-    * a generation's stats was absent (or all-null) in that generation's
-    * data, where the range predicate cannot match — skip is exact, not
-    * best-effort. */
-  def readRange(table: String, column: String, lo: Any, hi: Any): Option[DataFrame] =
-    scan(table, col(column).between(org.apache.spark.sql.functions.lit(lo),
-      org.apache.spark.sql.functions.lit(hi)))
-
-  /** Predicate-pushdown form of the zone-map read: extracts the
-    * column-vs-literal range conjuncts a Catalyst predicate implies
-    * (=, <, <=, >, >=, BETWEEN, IN — anything else contributes no
-    * pruning), skips every generation whose zones are disjoint from ANY
-    * conjunct, and applies the FULL original predicate to whatever is
-    * read — pruning is an execution optimization, the filter semantics
-    * are exactly `read(table).filter(predicate)`. Strict bounds are
-    * relaxed to inclusive for the skip decision (conservative: may read
-    * a boundary-only generation, never skips a matching row). */
-  def scan(table: String, predicate: org.apache.spark.sql.Column): Option[DataFrame] = {
+    * unsupported-for-stats never skips; a column absent from a file's
+    * zones was absent (or all-null) there, where a range cannot match —
+    * skip is exact, not best-effort. */
+  def scan(table: String, predicate: Column): Option[DataFrame] = {
     val gens = liveGenerations(table)
-    if (gens.isEmpty) return None
-    Some(readGenerationsWhere(gens, predicate))
+    if (gens.isEmpty) None else Some(readWhere(new Chain(gens), predicate))
   }
 
   /** True iff `column` exists in the parquet schema of EVERY live
@@ -546,175 +536,98 @@ class TableStore(spark: SparkSession, root: String,
       spark.read.parquet(g._3.toString).schema.fieldNames.contains(column))
   }
 
-  /** The zone-map-pruned read: per generation, all files kept (read the
-    * dir — cheapest, normal partition discovery), a subset (read the
-    * kept files under the generation's basePath so `col=value/`
-    * partition columns still resolve), or none (generation skipped
+  /** THE pruning decision of every predicate read ([[scan]],
+    * [[readChangesSinceWhere]], [[deleteWhere]]'s file discovery,
+    * [[probeExists]], [[scanFileCounts]]). Walks the analyzed condition of
+    * `filtered` (a Spark 4 Column is a lazy tree whose comparisons exist
+    * only after analysis) once, and reads each generation's sidecars
+    * once (a re-read could race gc). */
+  private def prunePlan(chain: Chain, filtered: DataFrame): Seq[TableStore.GenPlan] = {
+    val (bounds, eqs) = filtered.queryExecution.analyzed match {
+      case org.apache.spark.sql.catalyst.plans.logical.Filter(cond, _) =>
+        (TableStore.predicateBounds(cond), TableStore.predicateEqualities(cond))
+      case _ => (Nil, Nil)
+    }
+    chain.gens.map { g =>
+      val gone = chain.gone(g)
+      val zm = readSidecar(g._3, TableStore.zoneMapFile)(TableStore.parseZoneMap)
+      val bf = if (eqs.isEmpty) None
+        else readSidecar(g._3, TableStore.bloomFile)(TableStore.parseBloom)
+      // a tombstoned file may still sit in ITS generation's sidecars
+      // (stats are written once) — subtract, never read stale rows
+      val listed = zm.map(_.keySet).orElse(bf.map(_.keySet))
+        .fold(0)(files => (files -- gone).size)
+      val kept = TableStore.prunedFiles(zm, bounds, bf, eqs).map(_ -- gone)
+      TableStore.GenPlan(g, gone, kept, listed)
+    }
+  }
+
+  /** `chain` read through [[prunePlan]]: per generation all files
+    * (read the dir — cheapest, normal partition discovery), a subset
+    * (read under the generation's basePath), or none (skipped
     * entirely); the FULL predicate then filters whatever was read. */
-  private def readGenerationsWhere(gens: Seq[(Long, String, Path)],
-                                   predicate: org.apache.spark.sql.Column): DataFrame = {
-    val full = readGenerations(gens).filter(predicate)
-    val bounds = analyzedBounds(full)
-    val eqs = analyzedEqualities(full)
-    val replaced = replacedIn(gens)
-    val parts = gens.flatMap { g =>
-      val gone = replaced.getOrElse(g._3.getName, Set.empty[String])
-      val zm = readZoneMap(g._3) // read once: re-reads can race gc
-      val bf = if (eqs.isEmpty) None else readBloom(g._3)
-      TableStore.prunedFiles(zm, bounds, bf, eqs) match {
-        case None => readGeneration(g, gone) // no stats
-        case Some(files0) =>
-          // a tombstoned file may still sit in ITS generation's sidecar
-          // (stats are written once) — subtract, never read stale rows
-          val files = files0 -- gone
-          if (files.isEmpty) None
-          else {
-            val listed = zm.map(_.size).orElse(bf.map(_.size)).getOrElse(0)
-            if (gone.isEmpty && files.size == listed)
-              Some(spark.read.parquet(g._3.toString))
-            else Some(spark.read
-              .option("basePath", g._3.toString)
-              .parquet(files.toSeq.sorted.map(f => new Path(g._3, f).toString): _*))
-          }
+  private def readWhere(chain: Chain, predicate: Column): DataFrame = {
+    val full = chain.table.filter(predicate)
+    val parts = prunePlan(chain, full).flatMap { p =>
+      p.kept match {
+        case None => readGeneration(p.gen, p.gone)
+        case Some(files) if p.gone.isEmpty && files.size == p.listed =>
+          Some(spark.read.parquet(p.gen._3.toString))
+        case Some(files) => readFiles(p.gen._3, files)
       }
     }
-    if (parts.isEmpty) full.limit(0)
     // Anchor the union on the FULL schema (zero rows): if every
-    // generation carrying a predicate column was zone-pruned and only
+    // generation carrying a predicate column was pruned and only
     // stats-less generations lacking it remain, the kept parts alone
     // would not resolve `predicate` (AnalysisException) — the anchor
     // null-fills the column, matching read(table).filter(predicate).
-    else parts.foldLeft(full.limit(0))(
-        _.unionByName(_, allowMissingColumns = true))
+    parts.foldLeft(full.limit(0))(_.unionByName(_, allowMissingColumns = true))
       .filter(predicate)
   }
 
-  /** Bounds from a just-built `.filter(predicate)` DataFrame: a Spark 4
-    * Column is a lazy ColumnNode tree, so the comparison structure only
-    * exists after analysis — take the analyzed Filter's catalyst
-    * condition (literal sides are Cast-wrapped but foldable). */
-  private def analyzedBounds(filtered: DataFrame) =
-    filtered.queryExecution.analyzed match {
-      case org.apache.spark.sql.catalyst.plans.logical.Filter(cond, _) =>
-        TableStore.predicateBounds(cond)
-      case _ => Nil
-    }
-
-  /** Equality conjuncts (`col = lit`, `col IN (...)`) over
-    * Bloom-eligible columns, as the candidate CANONICAL STRING values
-    * the sidecar hashes — the point-probe analogue of
-    * [[analyzedBounds]]. */
-  private def analyzedEqualities(filtered: DataFrame) =
-    filtered.queryExecution.analyzed match {
-      case org.apache.spark.sql.catalyst.plans.logical.Filter(cond, _) =>
-        TableStore.predicateEqualities(cond)
-      case _ => Nil
-    }
-
   /** Existence probe for replay guards: does any row satisfy
-    * `predicate`? Goes through [[scan]], so generations whose zone maps
-    * exclude the predicate are never opened — a streaming sink that
-    * tags each appended generation with a constant batch id pays
+    * `predicate`? Reads through the pruning plan, so generations whose
+    * sidecars exclude the predicate are never opened — a streaming sink
+    * that tags each appended generation with a constant batch id pays
     * O(live-generation metadata + at most one generation's data) per
     * micro-batch instead of an unbounded full-table scan (the guard
     * runs EVERY micro-batch; anything O(table) grows without bound on
-    * a long-running stream). `columns` names the predicate's inputs:
-    * if the table, or any of them, is absent, the probe is false
-    * without touching data. */
-  def probeExists(table: String, predicate: org.apache.spark.sql.Column,
-                  columns: Seq[String]): Boolean =
-    read(table).exists(df =>
-      columns.forall(df.schema.fieldNames.contains) &&
-        scan(table, predicate).exists(!_.isEmpty))
-
-  /** How many live generations a `readRange` over this range would skip
-    * ENTIRELY — the coarse observability hook; [[zoneFileCounts]] is the
-    * file-granular one. */
-  def zoneSkipCount(table: String, column: String, lo: Any, hi: Any): Int =
-    zoneSkipCount(table,
-      col(column).between(org.apache.spark.sql.functions.lit(lo),
-        org.apache.spark.sql.functions.lit(hi)))
-
-  /** [[zoneSkipCount]] for a full predicate, mirroring [[scan]]. */
-  def zoneSkipCount(table: String, predicate: org.apache.spark.sql.Column): Int = {
-    val gens = liveGenerations(table)
-    if (gens.isEmpty) return 0
-    val bounds = analyzedBounds(readGenerations(gens).filter(predicate))
-    gens.count(g => TableStore.keptFiles(readZoneMap(g._3), bounds)
-      .exists(_.isEmpty))
+    * a long-running stream). If the table, or any column the predicate
+    * names (exact case), is absent, the probe is false without touching
+    * data. */
+  def probeExists(table: String, predicate: Column): Boolean = {
+    val chain = new Chain(liveGenerations(table))
+    chain.gens.nonEmpty &&
+      org.apache.spark.sql.GraftExpressionBridge.columnNames(predicate)
+        .forall(chain.table.schema.fieldNames.contains) &&
+      !readWhere(chain, predicate).isEmpty
   }
 
-  /** (files a scan with this predicate would read, total live files) —
-    * what the file-granular skipping actually saves. A generation
-    * without stats has an unknown file count; it reports (1, 1), i.e.
-    * read-everything with no pruning credit. */
-  def zoneFileCounts(table: String,
-                     predicate: org.apache.spark.sql.Column): (Int, Int) = {
-    val gens = liveGenerations(table)
-    if (gens.isEmpty) return (0, 0)
-    val bounds = analyzedBounds(readGenerations(gens).filter(predicate))
-    gens.map { g =>
-      readZoneMap(g._3) match {
-        case None => (1, 1)
-        case Some(zm) =>
-          (TableStore.keptFiles(Some(zm), bounds).get.size, zm.size)
-      }
-    }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+  /** (files a [[scan]] with this predicate opens, files in the live
+    * snapshot) — what the sidecars actually save. The scan is built,
+    * not run, and its opened files are counted as Spark resolves them,
+    * so directory-level partition pruning is included and the count is
+    * always the scan's own; the total is [[snapshotFileList]]'s size. */
+  def scanFileCounts(table: String, predicate: Column): (Int, Int) = {
+    val chain = new Chain(liveGenerations(table))
+    if (chain.gens.isEmpty) (0, 0)
+    else (readWhere(chain, predicate).inputFiles.length, chain.files.size)
   }
 
-  /** (files a [[scan]] with this predicate would open, total live
-    * files) under the COMBINED zone + Bloom pruning — what the sidecars
-    * actually save; [[zoneFileCounts]] isolates the zone contribution.
-    * A generation without stats of either kind reports (1, 1):
-    * read-everything, no pruning credit. */
-  def scanFileCounts(table: String,
-                     predicate: org.apache.spark.sql.Column): (Int, Int) = {
-    val gens = liveGenerations(table)
-    if (gens.isEmpty) return (0, 0)
-    val full = readGenerations(gens).filter(predicate)
-    val bounds = analyzedBounds(full)
-    val eqs = analyzedEqualities(full)
-    val replaced = replacedIn(gens)
-    gens.map { g =>
-      val gone = replaced.getOrElse(g._3.getName, Set.empty[String])
-      val zm = readZoneMap(g._3)
-      val bf = if (eqs.isEmpty) None else readBloom(g._3)
-      TableStore.prunedFiles(zm, bounds, bf, eqs) match {
-        case None => (1, 1)
-        case Some(files) =>
-          ((files -- gone).size,
-            (zm.map(_.keySet).orElse(bf.map(_.keySet)).getOrElse(Set.empty)
-              -- gone).size)
-      }
-    }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-  }
-
-  private def readZoneMap(gen: Path): Option[Map[String, Map[String, TableStore.Zone]]] = {
-    val p = new Path(gen, TableStore.zoneMapFile)
+  /** A generation's zone-map or Bloom sidecar, parsed. Stats are an
+    * optimization: absent or unreadable reads as None (no stats,
+    * must-read). */
+  private def readSidecar[A](gen: Path, name: String)(parse: String => A): Option[A] = {
+    val p = new Path(gen, name)
     val f = fs(p)
-    try {
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        Some(TableStore.parseZoneMap(txt))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None } // unreadable = no stats
+    try if (f.exists(p)) Some(parse(readText(f, p))) else None
+    catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  private def readBloom(gen: Path): Option[Map[String, Map[String, TableStore.Bloom]]] = {
-    val p = new Path(gen, TableStore.bloomFile)
-    val f = fs(p)
-    try {
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        Some(TableStore.parseBloom(txt))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None } // unreadable = no sketch
+  private def readText(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
   }
 
   /** A generation's data files as generation-relative paths (partition
@@ -745,13 +658,7 @@ class TableStore(spark: SparkSession, root: String,
   private def readReplaces(gen: Path): Map[String, Set[String]] = {
     val p = new Path(gen, TableStore.replacesFile)
     val f = fs(p)
-    if (!f.exists(p)) Map.empty
-    else {
-      val in = f.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      TableStore.parseReplaces(txt)
-    }
+    if (!f.exists(p)) Map.empty else TableStore.parseReplaces(readText(f, p))
   }
 
   /** Compute and stage a generation's stats — zone map AND (when the
@@ -808,8 +715,7 @@ class TableStore(spark: SparkSession, root: String,
     * [[compact]]; after it, the per-file zone maps turn a key probe
     * into O(matching files) reads — appends interleave keys, clustering
     * is what makes the zones tight. */
-  def rewriteClustered(table: String, clusterCol: org.apache.spark.sql.Column,
-                       nFiles: Int): Unit = {
+  def rewriteClustered(table: String, clusterCol: Column, nFiles: Int): Unit = {
     var attempts = 0
     var done = false
     while (!done && attempts < 5) {
@@ -818,7 +724,7 @@ class TableStore(spark: SparkSession, root: String,
       if (gens.isEmpty) done = true
       else done =
         try commit(table,
-          readGenerations(gens)
+          new Chain(gens).table
             .repartitionByRange(nFiles, clusterCol)
             .sortWithinPartitions(clusterCol),
           "comp", expectedSeq = Some(gens.last._1 + 1))
@@ -907,13 +813,12 @@ class TableStore(spark: SparkSession, root: String,
     * never silently shadowed. */
   def merge(table: String, updates: DataFrame, keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    import org.apache.spark.sql.functions.input_file_name
     var attempts = 0
     while (attempts < 5) {
       attempts += 1
       val gens = liveGenerations(table)
       if (gens.isEmpty) { append(table, updates); return }
-      val cur = readGenerations(gens)
+      val cur = new Chain(gens).table
       val keys = updates.select(keyCols.map(col): _*).distinct()
       val affectedAbs = cur.withColumn("_gf", input_file_name())
         .join(keys, keyCols).select("_gf").distinct()
@@ -938,17 +843,16 @@ class TableStore(spark: SparkSession, root: String,
   /** Row-level delete at O(affected files): rewrite only the files
     * holding a matching row, minus those rows, tombstoning the
     * originals — same mechanism, protocol and caveats as [[merge]].
-    * Discovery goes through [[scan]], so the zone/Bloom sidecars bound
-    * it to O(candidate files) for pruned predicates (a key-equality
-    * delete never scans the table). */
-  def deleteWhere(table: String, predicate: org.apache.spark.sql.Column): Unit = {
-    import org.apache.spark.sql.functions.input_file_name
+    * Discovery reads through the same pruning plan as [[scan]], so the
+    * zone/Bloom sidecars bound it to O(candidate files) for pruned
+    * predicates (a key-equality delete never scans the table). */
+  def deleteWhere(table: String, predicate: Column): Unit = {
     var attempts = 0
     while (attempts < 5) {
       attempts += 1
       val gens = liveGenerations(table)
       if (gens.isEmpty) return
-      val affectedAbs = readGenerationsWhere(gens, predicate)
+      val affectedAbs = readWhere(new Chain(gens), predicate)
         .withColumn("_gf", input_file_name())
         .select("_gf").distinct().collect().map(_.getString(0)).toSeq
       if (affectedAbs.isEmpty) return // nothing matches: no-op, no commit
@@ -956,8 +860,7 @@ class TableStore(spark: SparkSession, root: String,
       // three-valued logic: DELETE removes rows where the predicate is
       // TRUE; a NULL-evaluating row is KEPT (bare !predicate would
       // evaluate NULL and silently drop it)
-      val keep = !org.apache.spark.sql.functions.coalesce(predicate,
-        org.apache.spark.sql.functions.lit(false))
+      val keep = !coalesce(predicate, lit(false))
       val newRows = affectedRows(gens, replaces).filter(keep)
       val done =
         try commit(table, newRows, TableStore.mergeKind,
@@ -973,10 +876,8 @@ class TableStore(spark: SparkSession, root: String,
     * under each generation's basePath. */
   private def affectedRows(gens: Seq[(Long, String, Path)],
                            replaces: Map[String, Set[String]]): DataFrame =
-    replaces.toSeq.sortBy(_._1).map { case (genName, rels) =>
-      val dir = gens.find(_._3.getName == genName).get._3
-      spark.read.option("basePath", dir.toString)
-        .parquet(rels.toSeq.sorted.map(f => new Path(dir, f).toString): _*)
+    replaces.toSeq.sortBy(_._1).flatMap { case (genName, rels) =>
+      readFiles(gens.find(_._3.getName == genName).get._3, rels)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** Compaction: fold the current generations into one full generation
@@ -1008,7 +909,7 @@ class TableStore(spark: SparkSession, root: String,
       else done =
         // kind "comp": contains the whole table but changed no data, so
         // incremental readers (readChangesSince) skip it
-        try commit(table, binPacked(readGenerations(gens), gens), "comp",
+        try commit(table, binPacked(new Chain(gens).table, gens), "comp",
           expectedSeq = Some(gens.last._1 + 1))
         catch {
           // a concurrent compactor's gc can delete a snapshot file
@@ -1059,7 +960,7 @@ class TableStore(spark: SparkSession, root: String,
       // reclaim) an unreadable-but-committed delta inside it
       if (unreadableAtOrBelow(table, gens.last._1)) return false
       val done =
-        try commit(table, binPacked(readGenerations(run), run),
+        try commit(table, binPacked(new Chain(run).table, run),
           f"fold${run.head._1}%07d",
           expectedSeq = Some(gens.last._1 + 1))
         catch { case scala.util.control.NonFatal(_) => false }
@@ -1345,7 +1246,7 @@ class TableStore(spark: SparkSession, root: String,
   }
 }
 
-object TableStore {
+object TableStore extends org.apache.spark.sql.catalyst.expressions.PredicateHelper {
   /** Thrown by [[TableStore.readAt]] when the requested point in history
     * existed but no generation at or below it survives gc — the
     * time-travel analogue of querying a vacuumed Delta/Iceberg version. */
@@ -1393,6 +1294,12 @@ object TableStore {
   /** Generation kind written by [[TableStore.merge]]/[[TableStore.deleteWhere]]:
     * carries rewritten rows + a tombstone list hiding the originals. */
   private[gdl] val mergeKind = "merge"
+
+  /** One generation's part in a predicate read: its tombstoned files,
+    * the files its sidecars cannot exclude (None = no stats: read the
+    * whole generation) and how many live files the sidecars list. */
+  private final case class GenPlan(gen: (Long, String, Path), gone: Set[String],
+                                   kept: Option[Set[String]], listed: Int)
 
   /** A fold generation's kind is `fold<coveredFromSeq>`: the generation
     * at slot S carries EXACTLY the rows of the delta generations
@@ -1489,10 +1396,8 @@ object TableStore {
   private[gdl] final case class Bloom(bits: Int, hashes: Int,
                                       bs: java.util.BitSet)
 
-  private[gdl] def encPub(s: String): String = enc(s)
-
   /** Generation-relative path of an absolute part-file URI — keeps
-    * `col=value/` partition dirs, mirrors [[computeZoneMap]]'s keys. */
+    * `col=value/` partition dirs, mirrors [[computeStats]]' keys. */
   private[gdl] def relativize(genRoot: String, file: String): String = {
     val rootUri = new Path(genRoot).toUri.getPath
     val p = new Path(file).toUri.getPath
@@ -1554,27 +1459,25 @@ object TableStore {
   private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
   private def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
 
-  /** TSV zone map for a just-written generation, PER PART FILE: one
-    * line per (file, schema column) — every schema column appears (a
-    * column missing entirely from a file's lines means it was absent
-    * from that file's data, which is what lets readers skip on
-    * absent-column semantics). File keys are generation-relative paths
-    * (so `col=value/part-...` keeps its partition dirs). Per-file
-    * granularity is what makes CLUSTERED layouts pay: after
-    * [[TableStore.rewriteClustered]] each file covers a tight key
-    * range, and a probe reads O(matching files) of the generation. */
-  private[gdl] def computeZoneMap(df: DataFrame, genRoot: String): String =
-    computeStats(df, genRoot, Nil, 1, 1)._1
-
   /** The fused stats pass: zone TSV and (when `bloomCols` is non-empty)
     * Bloom sidecar TSV from ONE `groupBy(input_file_name())` — min/max
     * and sketch aggregates ride the same shuffle-free aggregation
     * (mixed declarative + object-buffer aggregates run under
-    * ObjectHashAggregate). */
+    * ObjectHashAggregate).
+    *
+    * The zone map is PER PART FILE: one line per (file, schema column) —
+    * every schema column appears (a column missing entirely from a
+    * file's lines means it was absent from that file's data, which is
+    * what lets readers skip on absent-column semantics). File keys are
+    * generation-relative paths (so `col=value/part-...` keeps its
+    * partition dirs). Per-file granularity is what makes CLUSTERED
+    * layouts pay: after [[TableStore.rewriteClustered]] each file covers
+    * a tight key range, and a probe reads O(matching files) of the
+    * generation. */
   private[gdl] def computeStats(df: DataFrame, genRoot: String,
                                 bloomCols: Seq[String], bloomBits: Int,
                                 bloomHashes: Int): (String, Option[String]) = {
-    import org.apache.spark.sql.functions.{max => fmax, min => fmin, input_file_name}
+    import org.apache.spark.sql.functions.{max => fmax, min => fmin}
     import org.apache.spark.sql.types._
     val fields = df.schema.fields
     val eligible = fields.filter(f => f.dataType match {
@@ -1597,8 +1500,7 @@ object TableStore {
     // base + i — is untouched)
     val aggs = zoneAggs ++ bloomAggs ++
       (if (bloomCols.isEmpty) Nil
-       else Seq(org.apache.spark.sql.functions.count(
-         org.apache.spark.sql.functions.lit(1)).as("_rows")))
+       else Seq(org.apache.spark.sql.functions.count(lit(1)).as("_rows")))
     val perFile: Seq[(String, org.apache.spark.sql.Row)] =
       if (aggs.isEmpty)
         df.select(input_file_name().as("_f")).distinct()
@@ -1703,17 +1605,6 @@ object TableStore {
       f -> xs.map(x => (x._2, x._3)).toMap
     }
 
-  /** Which of a generation's files can contain rows satisfying every
-    * bound conjunct: None = no stats (read the whole generation),
-    * Some(files) = exactly these (possibly empty = skip it all). */
-  private[gdl] def keptFiles(zones: Option[Map[String, Map[String, Zone]]],
-                             bounds: Seq[(String, Option[Any], Option[Any])])
-      : Option[Set[String]] =
-    zones.map(_.filter { case (_, fileZones) =>
-      bounds.forall { case (c, lo, hi) =>
-        zoneOverlaps(Some(fileZones), c, lo, hi) }
-    }.keySet)
-
   /** Can generation `zones` contain a row with `lo ≤ column ≤ hi`
     * (either bound may be absent = unbounded)? Every uncertain case
     * answers true (must read); only a proven-disjoint zone answers
@@ -1763,19 +1654,10 @@ object TableStore {
     case _ => None
   }
 
-  /** The per-column inclusive range conjuncts a predicate implies, for
-    * zone pruning: (column, lo?, hi?) — one entry per comparison
-    * conjunct (a column constrained twice yields two entries; pruning
-    * requires the zone to overlap ALL of them). Anything that is not a
-    * top-level AND of column-vs-literal comparisons contributes
-    * nothing: OR, expressions over the column, casts, and UDF-ish
-    * conjuncts are simply not used to skip. Strict inequalities relax
-    * to inclusive — conservative in the safe direction. */
   // bare attribute only — NEVER unwrap a cast on the column side
   // (cast(col as narrower) is not range-monotonic, skipping on the
   // cast-space bound could drop matching rows)
-  private def exprName(x: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Option[String] = x match {
+  private def exprName(x: Expression): Option[String] = x match {
     case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
       Some(a.name)
     case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
@@ -1785,8 +1667,7 @@ object TableStore {
 
   // literal side: anything foldable (the analyzer wraps literals in
   // widening casts; eval() folds them); a null bound gives no pruning
-  private def exprValue(x: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Option[Any] =
+  private def exprValue(x: Expression): Option[Any] =
     if (!x.foldable) None
     else x.eval() match {
       case null => None
@@ -1794,51 +1675,57 @@ object TableStore {
       case other => Some(other)
     }
 
-  private def exprConjuncts(x: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = x match {
-    case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-      exprConjuncts(l) ++ exprConjuncts(r)
-    case other => Seq(other)
+  /** The conjuncts of `e`, each comparison with an attribute on the
+    * right turned around (`lit < col` becomes `col > lit`), so the
+    * extractors below match the attribute on the left only. */
+  private def attrFirstConjuncts(e: Expression): Seq[Expression] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    splitConjunctivePredicates(e).map {
+      case c: BinaryComparison if exprName(c.right).isDefined &&
+          exprName(c.left).isEmpty => c match {
+        case EqualTo(l, a) => EqualTo(a, l)
+        case EqualNullSafe(l, a) => EqualNullSafe(a, l)
+        case LessThan(l, a) => GreaterThan(a, l)
+        case LessThanOrEqual(l, a) => GreaterThanOrEqual(a, l)
+        case GreaterThan(l, a) => LessThan(a, l)
+        case GreaterThanOrEqual(l, a) => LessThanOrEqual(a, l)
+        case other => other
+      }
+      case other => other
+    }
   }
 
-  private[gdl] def predicateBounds(e: org.apache.spark.sql.catalyst.expressions.Expression)
+  /** The per-column inclusive range conjuncts a predicate implies, for
+    * zone pruning: (column, lo?, hi?) — one entry per comparison
+    * conjunct (a column constrained twice yields two entries; pruning
+    * requires the zone to overlap ALL of them). Anything that is not a
+    * top-level AND of column-vs-literal comparisons contributes
+    * nothing: OR, expressions over the column, casts, and UDF-ish
+    * conjuncts are simply not used to skip. Strict inequalities relax
+    * to inclusive — conservative in the safe direction. */
+  private[gdl] def predicateBounds(e: Expression)
       : Seq[(String, Option[Any], Option[Any])] = {
     import org.apache.spark.sql.catalyst.expressions._
-    def name(x: Expression): Option[String] = exprName(x)
-    def value(x: Expression): Option[Any] = exprValue(x)
-    def conjuncts(x: Expression): Seq[Expression] = exprConjuncts(x)
-    conjuncts(e).flatMap {
-      case EqualTo(a, l) if name(a).isDefined && value(l).isDefined =>
-        Some((name(a).get, value(l), value(l)))
-      case EqualTo(l, a) if name(a).isDefined && value(l).isDefined =>
-        Some((name(a).get, value(l), value(l)))
-      case GreaterThan(a, l) if name(a).isDefined && value(l).isDefined =>
-        Some((name(a).get, value(l), None))
-      case GreaterThanOrEqual(a, l) if name(a).isDefined && value(l).isDefined =>
-        Some((name(a).get, value(l), None))
-      case LessThan(a, l) if name(a).isDefined && value(l).isDefined =>
-        Some((name(a).get, None, value(l)))
-      case LessThanOrEqual(a, l) if name(a).isDefined && value(l).isDefined =>
-        Some((name(a).get, None, value(l)))
-      case GreaterThan(l, a) if name(a).isDefined && value(l).isDefined =>
-        Some((name(a).get, None, value(l)))
-      case GreaterThanOrEqual(l, a) if name(a).isDefined && value(l).isDefined =>
-        Some((name(a).get, None, value(l)))
-      case LessThan(l, a) if name(a).isDefined && value(l).isDefined =>
-        Some((name(a).get, value(l), None))
-      case LessThanOrEqual(l, a) if name(a).isDefined && value(l).isDefined =>
-        Some((name(a).get, value(l), None))
-      case In(a, vs) if name(a).isDefined && vs.nonEmpty &&
-          vs.forall(v => value(v).isDefined) =>
-        val lits = vs.map(v => value(v).get)
+    def bound(a: Expression, l: Expression, lo: Boolean, hi: Boolean) =
+      for (n <- exprName(a); v <- exprValue(l))
+        yield (n, if (lo) Some(v) else None, if (hi) Some(v) else None)
+    attrFirstConjuncts(e).flatMap {
+      case EqualTo(a, l) => bound(a, l, lo = true, hi = true)
+      case GreaterThan(a, l) => bound(a, l, lo = true, hi = false)
+      case GreaterThanOrEqual(a, l) => bound(a, l, lo = true, hi = false)
+      case LessThan(a, l) => bound(a, l, lo = false, hi = true)
+      case LessThanOrEqual(a, l) => bound(a, l, lo = false, hi = true)
+      case In(a, vs) if exprName(a).isDefined && vs.nonEmpty &&
+          vs.forall(v => exprValue(v).isDefined) =>
+        val lits = vs.map(v => exprValue(v).get)
         if (lits.forall(_.isInstanceOf[java.lang.Number])) {
           val decs = lits.map(v => new java.math.BigDecimal(v.toString))
-          Some((name(a).get, Some(decs.min), Some(decs.max)))
+          Some((exprName(a).get, Some(decs.min), Some(decs.max)))
         } else if (lits.forall(_.isInstanceOf[String])) {
           val ord = Ordering.comparatorToOrdering(
             (x: String, y: String) => utf8Cmp(x, y))
           val ss = lits.map(_.asInstanceOf[String])
-          Some((name(a).get, Some(ss.min(ord)), Some(ss.max(ord))))
+          Some((exprName(a).get, Some(ss.min(ord)), Some(ss.max(ord))))
         } else None
       case _ => None // no pruning information from this conjunct
     }
@@ -1853,9 +1740,7 @@ object TableStore {
     * canonical form); everything else — fractional equality, OR,
     * expressions over the column, non-literal sides — contributes
     * nothing and prunes nothing. */
-  private[gdl] def predicateEqualities(
-      e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[(String, Seq[String])] = {
+  private[gdl] def predicateEqualities(e: Expression): Seq[(String, Seq[String])] = {
     import org.apache.spark.sql.catalyst.expressions._
     // the attribute side must be RESOLVED (analyzed plan) so its type is
     // known to be canonical-string-safe; an unresolved attribute has no
@@ -1875,17 +1760,13 @@ object TableStore {
       case _ => None
     }
     def lit(x: Expression): Option[String] = exprValue(x).flatMap(canon)
-    exprConjuncts(e).flatMap {
+    attrFirstConjuncts(e).flatMap {
       case EqualTo(a, l) if eligName(a).isDefined && lit(l).isDefined =>
-        Some((eligName(a).get, Seq(lit(l).get)))
-      case EqualTo(l, a) if eligName(a).isDefined && lit(l).isDefined =>
         Some((eligName(a).get, Seq(lit(l).get)))
       // null-safe equality to a NON-NULL literal is plain equality for
       // membership; `col <=> null` matches null rows, which never set
       // sketch bits — canon(null) never arises (exprValue drops nulls)
       case EqualNullSafe(a, l) if eligName(a).isDefined && lit(l).isDefined =>
-        Some((eligName(a).get, Seq(lit(l).get)))
-      case EqualNullSafe(l, a) if eligName(a).isDefined && lit(l).isDefined =>
         Some((eligName(a).get, Seq(lit(l).get)))
       case In(a, vs) if eligName(a).isDefined && vs.nonEmpty &&
           vs.forall(v => lit(v).isDefined) =>

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * broadcast 1-row aggregate, never a driver-side scalar. The
   * outdegree rides on the NODE side — `ranks ⋈ outdeg` is a
   * node-sized join each round — never materialized onto the edge
-  * table: the sf10 profile (117 M edges, BenchProfilePr) showed an
+  * table: an sf10 stage profile (117 M edges) showed an
   * outdegree-annotated edge copy costs an edge-sized join + persist
   * up front (82 s) to save a node-sized join per round — exactly
   * backwards; the rounds themselves were already sub-second. For the

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeMap, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 
@@ -20,7 +20,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * payload predicate must not drop right rows that later rows still
   * match... and vice versa), so the rule is conservative: keys only.
   */
-object AsOfJoinKeyPushdown extends Rule[LogicalPlan] {
+object AsOfJoinKeyPushdown extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan transformUp {
     case f @ Filter(cond, j: AsOfJoinPlan) =>
@@ -33,7 +33,7 @@ object AsOfJoinKeyPushdown extends Rule[LogicalPlan] {
       }
       if (pushable.isEmpty) f
       else {
-        val leftCond = pushable.reduce(org.apache.spark.sql.catalyst.expressions.And)
+        val leftCond = pushable.reduce(And)
         val rightCond = leftCond.transform {
           case a: Attribute => leftToRight(a)
         }
@@ -41,14 +41,7 @@ object AsOfJoinKeyPushdown extends Rule[LogicalPlan] {
           left = Filter(leftCond, j.left),
           right = Filter(rightCond, j.right))
         if (kept.isEmpty) pushed
-        else Filter(kept.reduce(org.apache.spark.sql.catalyst.expressions.And), pushed)
+        else Filter(kept.reduce(And), pushed)
       }
   }
-
-  private def splitConjunctivePredicates(cond: Expression): Seq[Expression] =
-    cond match {
-      case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-        splitConjunctivePredicates(l) ++ splitConjunctivePredicates(r)
-      case other => Seq(other)
-    }
 }

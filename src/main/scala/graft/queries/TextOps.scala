@@ -225,7 +225,7 @@ object TextOps {
         // for ReuseExchange to dedup, so an unmaterialized form would
         // pay the k·|shingles| md5 pass twice. r16 (VERDICT #1):
         // persist, not an eager localCheckpoint — the separate
-        // checkpoint job cost ~0.7 s/cell here (Q139Probe: 3.70 →
+        // checkpoint job cost ~0.7 s/cell here (measured: 3.70 →
         // 3.03 s in-window; the r14 exploded-groupBy shape measured
         // 2.96–5.32 s in the same window, so the r15 "regression vs a
         // 2.07 quiet cell" was window luck, not a plan loss)

@@ -74,8 +74,7 @@ object DeadLetter {
     // most that generation instead of rescanning the whole quarantine
     // table every micro-batch
     val replayed = store.probeExists(table,
-      col("batch_id") === batchId && col("source") === source,
-      Seq("batch_id", "source"))
+      col("batch_id") === batchId && col("source") === source)
     if (!replayed) {
       val rows = quarantineRows(bad, source)
         .withColumn("batch_id", lit(batchId))

@@ -42,7 +42,7 @@ object StreamingQualityGate {
         val clean = DeadLetter.quarantineBatch(store, quarantineTable,
           "quality_gate", batchId, flagged, QualityRules.violations)
         val replayed = store.probeExists(curatedTable,
-          col("batch_id") === batchId, Seq("batch_id"))
+          col("batch_id") === batchId)
         if (!replayed) {
           val rows = clean.select(docCols.map(col): _*)
             .withColumn("batch_id", lit(batchId))

@@ -39,7 +39,7 @@ object StreamingValidation {
         // constant batch_id, so this opens at most that generation —
         // not an O(table) scan per micro-batch.
         val replayed = store.probeExists("validation_results",
-          col("batch_id") === batchId, Seq("batch_id"))
+          col("batch_id") === batchId)
         if (!replayed && !batch.isEmpty) {
           val rows = ChecksumValidator.validate(
             spark, batch.as[ProcessingAssetRow], reader)

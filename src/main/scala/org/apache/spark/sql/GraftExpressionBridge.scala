@@ -12,4 +12,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftExpressionBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The top-level column names `c` references, as written. */
+  def columnNames(c: Column): Seq[String] =
+    c.node.collect { case a: internal.UnresolvedAttribute => a.nameParts.head }
 }

@@ -27,6 +27,11 @@ class ZoneMapSpec extends AnyFunSuite {
         (lo until lo + 100L).map(i => (i, s"$p$i")).toDF("id", "s")))
     }
 
+  /** How many of the generations (given by their files) `df` opens no
+    * file of. */
+  private def skipped(gens: Seq[Set[String]], df: DataFrame): Int =
+    gens.count(g => (opened(df) & g).isEmpty)
+
   /** Delete the zone map of the generation holding `files`. */
   private def dropZoneMap(files: Set[String]): Unit =
     dirsOf(files).foreach { d =>
@@ -37,8 +42,8 @@ class ZoneMapSpec extends AnyFunSuite {
   test("range probe reads only the overlapping generation") {
     val store = freshStore()
     val gens = threeGens(store)
-    assert(store.zoneSkipCount("t", "id", 120L, 150L) == 2)
-    val got = store.readRange("t", "id", 120L, 150L).get
+    val got = store.scan("t", $"id".between(120L, 150L)).get
+    assert(skipped(gens, got) == 2)
     // only generation 1's files are opened
     assert(opened(got).forall(gens(1)))
     assert(rows(got) ==
@@ -47,17 +52,17 @@ class ZoneMapSpec extends AnyFunSuite {
 
   test("a range matching nothing skips every generation but keeps the schema") {
     val store = freshStore()
-    threeGens(store)
-    assert(store.zoneSkipCount("t", "id", 1000L, 2000L) == 3)
-    val got = store.readRange("t", "id", 1000L, 2000L).get
+    val gens = threeGens(store)
+    val got = store.scan("t", $"id".between(1000L, 2000L)).get
+    assert(skipped(gens, got) == 3)
     assert(got.isEmpty && got.columns.toSeq == Seq("id", "s"))
   }
 
   test("string zones skip by UTF-8 order") {
     val store = freshStore()
-    threeGens(store)
-    assert(store.zoneSkipCount("t", "s", "b", "b~") == 2)
-    val got = store.readRange("t", "s", "b", "b~").get
+    val gens = threeGens(store)
+    val got = store.scan("t", $"s".between("b", "b~")).get
+    assert(skipped(gens, got) == 2)
     assert(rows(got) ==
       rows(store.read("t").get.filter($"s".between("b", "b~"))))
     assert(rows(got).nonEmpty)
@@ -66,20 +71,22 @@ class ZoneMapSpec extends AnyFunSuite {
   test("a generation without a zone map is always read (safety)") {
     val store = freshStore()
     val g0 = added(store, "t")(store.append("t", Seq((1L, "x")).toDF("id", "s")))
-    store.append("t", Seq((500L, "y")).toDF("id", "s"))
+    val g1 = added(store, "t")(store.append("t", Seq((500L, "y")).toDF("id", "s")))
     // delete generation 0's zone map: it must become un-skippable
     dropZoneMap(g0)
-    assert(store.zoneSkipCount("t", "id", 400L, 600L) == 0)
-    assert(rows(store.readRange("t", "id", 400L, 600L).get) == Set((500L, "y")))
+    val got = store.scan("t", $"id".between(400L, 600L)).get
+    assert(skipped(Seq(g0, g1), got) == 0)
+    assert(rows(got) == Set((500L, "y")))
   }
 
   test("a column absent from an old generation skips it; evolution stays correct") {
     val store = freshStore()
-    store.append("t", Seq((1L, "x")).toDF("id", "s"))
-    store.append("t", Seq((2L, "y", 7L)).toDF("id", "s", "v"))
+    val g0 = added(store, "t")(store.append("t", Seq((1L, "x")).toDF("id", "s")))
+    val g1 = added(store, "t")(
+      store.append("t", Seq((2L, "y", 7L)).toDF("id", "s", "v")))
     // gen0 has no `v` at all → reads as null there → cannot match a range
-    assert(store.zoneSkipCount("t", "v", 0L, 100L) == 1)
-    val got = store.readRange("t", "v", 0L, 100L).get
+    val got = store.scan("t", $"v".between(0L, 100L)).get
+    assert(skipped(Seq(g0, g1), got) == 1)
     assert(got.select("id").as[Long].collect().toSeq == Seq(2L))
   }
 
@@ -108,16 +115,16 @@ class ZoneMapSpec extends AnyFunSuite {
     // constant batch_id — the probe must prune every other generation
     // (O(1) data per micro-batch, not O(table))
     val store = freshStore()
-    (0L until 3L).foreach(b => store.append("q",
-      Seq((b, s"row$b")).toDF("batch_id", "s")))
-    assert(store.probeExists("q", $"batch_id" === 1L, Seq("batch_id")))
-    assert(!store.probeExists("q", $"batch_id" === 99L, Seq("batch_id")))
+    val gens = (0L until 3L).map(b => added(store, "q")(store.append("q",
+      Seq((b, s"row$b")).toDF("batch_id", "s"))))
+    assert(store.probeExists("q", $"batch_id" === 1L))
+    assert(!store.probeExists("q", $"batch_id" === 99L))
     // pruning is exact here: min==max==batch_id per generation
-    assert(store.zoneSkipCount("q", $"batch_id" === 1L) == 2)
-    assert(store.zoneSkipCount("q", $"batch_id" === 99L) == 3)
+    assert(skipped(gens, store.scan("q", $"batch_id" === 1L).get) == 2)
+    assert(skipped(gens, store.scan("q", $"batch_id" === 99L).get) == 3)
     // absent table / absent column → false, no data touched
-    assert(!store.probeExists("nope", $"batch_id" === 1L, Seq("batch_id")))
-    assert(!store.probeExists("q", $"missing" === 1L, Seq("missing")))
+    assert(!store.probeExists("nope", $"batch_id" === 1L))
+    assert(!store.probeExists("q", $"missing" === 1L))
   }
 
   test("compaction carries zone maps: skipping still works after folding") {
@@ -127,7 +134,7 @@ class ZoneMapSpec extends AnyFunSuite {
     threeGens(store) // autoCompact folds along the way (tier-1: minor)
     assert(store.history("t")
       .exists(g => TableStore.foldStart(g._2).isDefined))
-    val got = store.readRange("t", "id", 120L, 150L).get
+    val got = store.scan("t", $"id".between(120L, 150L)).get
     assert(rows(got) ==
       rows(store.read("t").get.filter($"id".between(120L, 150L))))
   }
@@ -138,8 +145,8 @@ class ZoneMapSpec extends AnyFunSuite {
     // id range + string equality: both conjuncts prune; the modulo
     // conjunct contributes nothing but still filters rows
     val pred = $"id".between(120L, 150L) && $"s" > "b" && $"id" % 2 === 0
-    assert(store.zoneSkipCount("t", pred) == 2)
     val got = store.scan("t", pred).get
+    assert(skipped(gens, got) == 2)
     assert(opened(got).forall(gens(1)))
     assert(rows(got) == rows(store.read("t").get.filter(pred)))
     assert(rows(got).nonEmpty)
@@ -147,54 +154,53 @@ class ZoneMapSpec extends AnyFunSuite {
 
   test("scan with IN prunes to the min-max envelope of the list") {
     val store = freshStore()
-    threeGens(store)
+    val gens = threeGens(store)
     val pred = $"id".isin(205L, 210L, 290L)
-    assert(store.zoneSkipCount("t", pred) == 2)
-    assert(rows(store.scan("t", pred).get) ==
-      rows(store.read("t").get.filter(pred)))
+    val got = store.scan("t", pred).get
+    assert(skipped(gens, got) == 2)
+    assert(rows(got) == rows(store.read("t").get.filter(pred)))
   }
 
   test("strict inequality at a zone boundary is conservative, never wrong") {
     val store = freshStore()
-    threeGens(store)
+    val gens = threeGens(store)
     // gen1 max id = 199; `id > 199` can't match gen1 rows but the skip
     // decision relaxes to >=, so gen1 is read and the filter drops it
     val pred = $"id" > 199L && $"id" < 205L
     val got = store.scan("t", pred).get
     assert(rows(got) == rows(store.read("t").get.filter(pred)))
     assert(got.select("id").as[Long].collect().forall(i => i > 199L && i < 205L))
-    assert(store.zoneSkipCount("t", pred) >= 1) // gen0 is provably disjoint
+    assert(skipped(gens, got) >= 1) // gen0 is provably disjoint
   }
 
   test("an OR predicate prunes nothing and stays correct") {
     val store = freshStore()
-    threeGens(store)
+    val gens = threeGens(store)
     val pred = $"id" === 5L || $"id" === 250L
-    assert(store.zoneSkipCount("t", pred) == 0)
-    assert(rows(store.scan("t", pred).get) ==
-      rows(store.read("t").get.filter(pred)))
+    val got = store.scan("t", pred).get
+    assert(skipped(gens, got) == 0)
+    assert(rows(got) == rows(store.read("t").get.filter(pred)))
   }
 
   test("partition columns (living only in dir names) are zone-mapped too") {
     val store = new TableStore(spark,
       java.nio.file.Files.createTempDirectory("zonemap-p").toString,
       partitioning = Map("t" -> Seq("ds")))
-    store.append("t", Seq((1L, "dsA"), (2L, "dsA")).toDF("id", "ds"))
-    store.append("t", Seq((3L, "dsB")).toDF("id", "ds"))
-    assert(store.zoneSkipCount("t", "ds", "dsB", "dsB") == 1)
-    assert(store.readRange("t", "ds", "dsB", "dsB").get
-      .select("id").as[Long].collect().toSeq == Seq(3L))
+    val gens = Seq(Seq((1L, "dsA"), (2L, "dsA")), Seq((3L, "dsB"))).map(rs =>
+      added(store, "t")(store.append("t", rs.toDF("id", "ds"))))
+    val got = store.scan("t", $"ds".between("dsB", "dsB")).get
+    assert(skipped(gens, got) == 1)
+    assert(got.select("id").as[Long].collect().toSeq == Seq(3L))
   }
 
   test("clustering rewrite turns an unskippable probe into O(matching files)") {
     val store = freshStore()
     // interleave keys across appends: every generation (and most files)
     // spans the whole key range, so nothing can be skipped
-    store.append("t", (0L until 300L by 3).map(i => (i, s"v$i")).toDF("id", "s"))
-    store.append("t", (1L until 300L by 3).map(i => (i, s"v$i")).toDF("id", "s"))
-    store.append("t", (2L until 300L by 3).map(i => (i, s"v$i")).toDF("id", "s"))
+    val gens = (0L until 3L).map(r => added(store, "t")(store.append("t",
+      (r until 300L by 3).map(i => (i, s"v$i")).toDF("id", "s"))))
     val pred = $"id".between(100L, 120L)
-    assert(store.zoneSkipCount("t", pred) == 0)
+    assert(skipped(gens, store.scan("t", pred).get) == 0)
 
     store.rewriteClustered("t", $"id", nFiles = 10)
     assert(store.history("t").last._2 == "comp")
@@ -202,7 +208,7 @@ class ZoneMapSpec extends AnyFunSuite {
     assert(rows(store.read("t").get) ==
       (0L until 300L).map(i => (i, s"v$i")).toSet)
     // the probe now reads a small fraction of the files
-    val (kept, total) = store.zoneFileCounts("t", pred)
+    val (kept, total) = store.scanFileCounts("t", pred)
     assert(total >= 10, s"expected >= 10 clustered files, got $total")
     assert(kept <= 2, s"expected <= 2 overlapping files, got $kept/$total")
     val got = store.scan("t", pred).get
@@ -221,7 +227,7 @@ class ZoneMapSpec extends AnyFunSuite {
     val got = store.scan("t", pred).get
     assert(got.as[(Long, String)].collect().toSet ==
       (0L until 10L by 2).map(i => (i, "dsA")).toSet)
-    val (kept, total) = store.zoneFileCounts("t", pred)
+    val (kept, total) = store.scanFileCounts("t", pred)
     assert(kept < total, s"expected file pruning, got $kept/$total")
   }
 
@@ -236,7 +242,7 @@ class ZoneMapSpec extends AnyFunSuite {
       graft.functions.ZOrder2.zorder($"x", $"y", 8), nFiles = 16)
     // a small box touches both columns; z-order keeps it in few files
     val pred = $"x".between(4L, 7L) && $"y".between(8L, 11L)
-    val (kept, total) = store.zoneFileCounts("t", pred)
+    val (kept, total) = store.scanFileCounts("t", pred)
     assert(total >= 16, s"expected >= 16 clustered files, got $total")
     assert(kept <= 4, s"z-order box probe should read <= 4 files, got $kept/$total")
     val got = store.scan("t", pred).get
@@ -259,8 +265,8 @@ class ZoneMapSpec extends AnyFunSuite {
       graft.functions.ZOrder2.zorder($"x", $"y", 8), nFiles = 16)
 
     val yProbe = $"y".between(8L, 11L)
-    val (keptXy, totalXy) = byX.zoneFileCounts("t", yProbe)
-    val (keptZy, totalZy) = byZ.zoneFileCounts("t", yProbe)
+    val (keptXy, totalXy) = byX.scanFileCounts("t", yProbe)
+    val (keptZy, totalZy) = byZ.scanFileCounts("t", yProbe)
     assert(totalXy >= 16 && totalZy >= 16)
     // x-layout: every range-partition of x contains every y → no skips
     assert(keptXy == totalXy, s"x-layout should not prune y, got $keptXy/$totalXy")
@@ -270,7 +276,7 @@ class ZoneMapSpec extends AnyFunSuite {
     // and the z-layout still prunes x-probes (not as tightly as the
     // dedicated x-layout, which is the trade being bought)
     val xProbe = $"x".between(4L, 7L)
-    val (keptZx, totalZx) = byZ.zoneFileCounts("t", xProbe)
+    val (keptZx, totalZx) = byZ.scanFileCounts("t", xProbe)
     assert(keptZx <= totalZx / 2, s"z-layout x-probe read $keptZx/$totalZx")
     // values identical under every layout/probe combination
     assert(rows2(byZ.scan("t", yProbe).get) ==
@@ -297,10 +303,11 @@ class ZoneMapSpec extends AnyFunSuite {
 
   test("all-null column zones are skippable; a later real value is found") {
     val store = freshStore()
-    store.append("t", Seq((1L, null.asInstanceOf[java.lang.Long])).toDF("id", "v"))
-    store.append("t", Seq((2L, java.lang.Long.valueOf(9L))).toDF("id", "v"))
-    assert(store.zoneSkipCount("t", "v", 0L, 100L) == 1)
-    assert(store.readRange("t", "v", 0L, 100L).get
-      .select("id").as[Long].collect().toSeq == Seq(2L))
+    val gens = Seq(null.asInstanceOf[java.lang.Long], java.lang.Long.valueOf(9L))
+      .zipWithIndex.map { case (v, i) => added(store, "t")(
+        store.append("t", Seq((i + 1L, v)).toDF("id", "v"))) }
+    val got = store.scan("t", $"v".between(0L, 100L)).get
+    assert(skipped(gens, got) == 1)
+    assert(got.select("id").as[Long].collect().toSeq == Seq(2L))
   }
 }

@@ -206,7 +206,7 @@ class GeometrySpec extends AnyFunSuite {
     store.rewriteClustered("p",
       graft.functions.ZOrder2.zorder(col("zx"), col("zy"), 11), nFiles = 16)
     val window = col("zx").between(512L, 767L) && col("zy").between(512L, 767L)
-    val (kept, total) = store.zoneFileCounts("p", window)
+    val (kept, total) = store.scanFileCounts("p", window)
     assert(total >= 16, s"expected >= 16 clustered files, got $total")
     assert(kept <= total / 2,
       s"z-layout window probe should prune, read $kept/$total")
