@@ -3,6 +3,7 @@ package graft.gdl
 import java.sql.Timestamp
 import java.time.Instant
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import scala.util.Random
 
 /** Dataset catalog CRUD ≙ the reference's datasets Lambda endpoints
@@ -89,14 +90,12 @@ class DatasetService(spark: SparkSession, store: TableStore,
     * check MaxKeys=1 (delete.py:37-45, O-11) against the manifest table. */
   def delete(id: String): Either[String, Unit] =
     get(id).flatMap { row =>
-      val hasVersions = store.read("processing_assets").exists { df =>
-        !df.filter(df("dataset_id") === id).limit(1).isEmpty
-      }
-      if (hasVersions)
+      // processing_assets is partitioned on dataset_id: the probe prunes
+      if (store.probeExists("processing_assets", col("dataset_id") === id))
         Left(s"dataset '$id' has existing versions") // delete.py:41-45
       else {
         // row-level delete (≙ DeleteItem, backend/datasets/delete.py)
-        store.deleteWhere(Table, org.apache.spark.sql.functions.col("id") === id)
+        store.deleteWhere(Table, col("id") === id)
         Right(())
       }
     }

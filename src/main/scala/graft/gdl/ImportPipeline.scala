@@ -4,6 +4,8 @@ import java.sql.Timestamp
 import java.time.Instant
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 import scala.util.Random
 
 /** The validate-and-import pipeline ≙ the reference's Step Function
@@ -48,12 +50,14 @@ class ImportPipeline(spark: SparkSession, store: TableStore,
         metadataUrl, Timestamp.from(now), "Running", None, "Pending", "Pending")
       store.append("import_executions", Seq(exec).toDS().toDF())
 
+      // validation rows not yet appended; a crash writes them beside its row
+      val unwritten = mutable.ArrayBuffer.empty[ValidationRow]
       val (validationSuccess, metaStatus, assetStatus) =
-        try runStages(dataset, versionId, metadataUrl)
+        try runStages(dataset, versionId, metadataUrl, unwritten)
         catch { case e: Exception =>
           // hard crash ⇒ summary never ran; record it like the reference
           // logs-and-continues (utils.py:78-82) so status shows Failed
-          store.append("validation_results", Seq(ValidationRow(
+          store.append("validation_results", (unwritten.toSeq :+ ValidationRow(
             datasetId, versionId, "pipeline", metadataUrl, Result.Failed,
             Map("message" -> s"${e.getClass.getSimpleName}: ${e.getMessage}")))
             .toDS().toDF())
@@ -78,78 +82,67 @@ class ImportPipeline(spark: SparkSession, store: TableStore,
       executionId
     }
 
-  private def runStages(dataset: DatasetRow, versionId: String,
-                        metadataUrl: String): (Option[Boolean], String, String) = {
+  /** One append per table; the summary reads the rows this run produced
+    * (the version id is a fresh ULID, so no other rows can match it). */
+  private def runStages(dataset: DatasetRow, versionId: String, metadataUrl: String,
+                        unwritten: mutable.ArrayBuffer[ValidationRow])
+      : (Option[Boolean], String, String) = {
     // [1] STAC crawl (O-14/O-16/O-18/O-19/O-28)
     val crawl = new StacCrawler(reader).run(dataset.id, versionId, metadataUrl)
-    if (crawl.validations.nonEmpty)
-      store.append("validation_results", crawl.validations.toDS().toDF())
-    if (!crawl.aborted) {
-      val rows = crawl.metadata ++ crawl.assets
-      if (rows.nonEmpty) store.append("processing_assets", rows.toDS().toDF())
-    }
+    unwritten ++= crawl.validations
+    val rows = if (crawl.aborted) Nil else crawl.metadata ++ crawl.assets
+    if (rows.nonEmpty) store.append("processing_assets", rows.toDS().toDF())
 
     // [2]/[3] checksum fan-out over DATA rows (O-21/O-17/O-10), read BACK
     // from the processing_assets table — like the reference's
     // content_iterator querying DynamoDB (O-5/O-6) — so the stage scales
     // with the manifest table, not with driver memory. Partition count
     // mirrors the reference's 10,000-item iteration window (O-27).
-    if (!crawl.aborted && crawl.assets.nonEmpty) {
+    val checksumRows = Option.when(!crawl.aborted && crawl.assets.nonEmpty) {
       val manifest = store.read("processing_assets").get
         .filter($"dataset_id" === dataset.id && $"version_id" === versionId &&
                 $"asset_type" === "DATA") // column predicates → parquet pushdown
         .as[ProcessingAssetRow]
-      val nData = crawl.assets.size // known from the crawl (≙ O-5 count)
-      val assets = manifest.repartition(math.max(1, math.ceil(nData / 10000.0).toInt))
-      val checksumRows = ChecksumValidator.validate(spark, assets, reader)
-      store.append("validation_results", checksumRows.toDF())
-
       // O-24 consistency rule (USAGE.md:76-79): same URL must carry one
       // multihash across all references — engine extension
-      val inconsistent = manifest
-        .groupBy($"url")
-        .agg(countDistinct($"multihash").as("n"))
-        .filter($"n" > 1)
-        .select($"url")
-        .as[String].collect()
-      if (inconsistent.nonEmpty)
-        store.append("validation_results", inconsistent.toSeq.map(u =>
-          ValidationRow(dataset.id, versionId, Check.InconsistentMultihash, u,
-            Result.Failed,
-            Map("message" -> s"URL referenced with differing multihashes: $u")))
-          .toDS().toDF())
+      unwritten ++= manifest.groupBy($"url").agg(countDistinct($"multihash").as("n"))
+        .filter($"n" > 1).select($"url").as[String].collect()
+        .map(u => ValidationRow(dataset.id, versionId, Check.InconsistentMultihash, u,
+          Result.Failed, Map("message" -> s"URL referenced with differing multihashes: $u")))
+      val nData = crawl.assets.size // known from the crawl (≙ O-5 count)
+      val assets = manifest.repartition(math.max(1, math.ceil(nData / 10000.0).toInt))
+      // persisted: the append runs the checksums, the summary counts the cache
+      ChecksumValidator.validate(spark, assets, reader).persist(StorageLevel.MEMORY_AND_DISK)
     }
 
-    // [5] validation summary (O-25/O-8): early-exit existence of failures
-    val anyFailure = store.read("validation_results").exists { df =>
-      !df.filter(df("dataset_id") === dataset.id &&
-                 df("version_id") === versionId &&
-                 df("result") === Result.Failed).limit(1).isEmpty
-    }
-    val success = !anyFailure
+    // [5] validation summary (O-25/O-8) after one append of every row
+    val success =
+      try {
+        val driverFailed = unwritten.exists(_.result == Result.Failed)
+        store.append("validation_results",
+          checksumRows.foldLeft(unwritten.toSeq.toDS())(_ union _).toDF())
+        unwritten.clear()
+        !driverFailed && !checksumRows.exists(_.filter(_.result == Result.Failed).count() > 0)
+      } finally checksumRows.foreach(_.unpersist())
 
     // [6] Choice: import on success (O-6/O-12/O-34)
     if (success && !crawl.aborted) {
-      val importer = new Importer(spark, storageRoot)
-      val titlePrefix = s"${dataset.title}-${dataset.id}"
       // copy manifest from the table (O-6), not driver memory
       val manifest = store.read("processing_assets").get
         .filter($"dataset_id" === dataset.id && $"version_id" === versionId)
         .as[ProcessingAssetRow]
-      def statusOf(assetType: String): String = {
-        // persist so the copy side-effects run exactly once: the report
-        // append and the status check both read the cached results
-        val results = importer.importAssets(manifest, reader, titlePrefix, assetType)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // per-file report ≙ the S3 Batch report CSVs
-          // (import_dataset/task.py:133-139)
-          store.append("import_reports", results.toDF())
-          val allOk = results.filter(r => r.result_code != "Succeeded").isEmpty
-          if (allOk) "Complete" else "Failed"
-        } finally { results.unpersist(); () }
-      }
-      (Some(true), statusOf("METADATA"), statusOf("DATA"))
+      // persisted: the copy runs once, in the report append; statuses read the cache
+      val results = new Importer(spark, storageRoot)
+        .importAssets(manifest, reader, s"${dataset.title}-${dataset.id}")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        // per-file report ≙ the S3 Batch report CSVs (import_dataset/task.py:133-139)
+        store.append("import_reports", results.toDF())
+        val failed = results.filter(_.result_code != "Succeeded")
+          .map(_.asset_type).distinct().collect()
+        def status(t: String) = if (failed.contains(t)) "Failed" else "Complete"
+        (Some(true), status("METADATA"), status("DATA"))
+      } finally { results.unpersist(); () }
     } else (Some(success), "Pending", "Pending")
   }
 }

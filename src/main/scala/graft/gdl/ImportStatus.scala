@@ -74,23 +74,23 @@ class ImportStatus(spark: SparkSession, store: TableStore) {
       // per-section upload failures from the copy report ≙ the per-job
       // S3 Batch FailureReasons the reference surfaces
       // (backend/import_status/get.py:140-155); message = the copy
-      // fleet's result_string, like the report CSV rows
-      def uploadErrors(assetType: String): Seq[ValidationError] =
-        store.read("import_reports").map { df =>
-          df.filter(col("dataset_id") === e.dataset_id &&
-                    col("version_id") === e.version_id &&
-                    col("asset_type") === assetType &&
-                    col("result_code") =!= "Succeeded")
-            .as[CopyResult].collect().toSeq.sortBy(_.url)
-            .map(r => ValidationError("copy", r.result_code, r.url,
-              Map("message" -> r.result_string, "new_key" -> r.new_key)))
-        }.getOrElse(Seq.empty)
+      // fleet's result_string; one read, split by section on the driver
+      val failedCopies = store.read("import_reports").map { df =>
+        df.filter(col("dataset_id") === e.dataset_id &&
+                  col("version_id") === e.version_id &&
+                  col("result_code") =!= "Succeeded")
+          .as[CopyResult].collect().toSeq.sortBy(_.url).groupBy(_.asset_type)
+      }.getOrElse(Map.empty[String, Seq[CopyResult]])
+      def upload(status: String, assetType: String) =
+        StatusSection(status, failedCopies.getOrElse(assetType, Nil).map(r =>
+          ValidationError("copy", r.result_code, r.url,
+            Map("message" -> r.result_string, "new_key" -> r.new_key))))
 
       Report(
         stepFunction = e.sfn_status,
         validation = StatusSection(validationOutcome, errors),
-        metadataUpload = StatusSection(metaStatus, uploadErrors("METADATA")),
-        assetUpload = StatusSection(assetStatus, uploadErrors("DATA")))
+        metadataUpload = upload(metaStatus, "METADATA"),
+        assetUpload = upload(assetStatus, "DATA"))
     }
   }
 }

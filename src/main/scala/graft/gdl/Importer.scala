@@ -84,8 +84,8 @@ class Importer(spark: SparkSession, storageRoot: String) extends Serializable {
     case _ => false
   }
 
-  /** Copy all manifest rows of one asset type for a version. Returns the
-    * per-file report (order-insensitive, like the reference's copy jobs).
+  /** Copy all manifest rows, rewriting the hrefs of METADATA rows. Returns
+    * the per-file report (order-insensitive, like the reference's copy jobs).
     *
     * Transient IO failures are retried IN the task up to `maxAttempts`
     * (the reference's copy fleet re-drives TemporaryFailure rows; a
@@ -96,15 +96,15 @@ class Importer(spark: SparkSession, storageRoot: String) extends Serializable {
     * honestly re-drivable by the caller. Deterministic errors stay
     * `PermanentFailure` on the first attempt. */
   def importAssets(assets: Dataset[ProcessingAssetRow], reader: UrlReader,
-                   titlePrefix: String, assetType: String,
+                   titlePrefix: String,
                    maxAttempts: Int = 3): Dataset[CopyResult] = {
     import assets.sparkSession.implicits._
     val root = storageRoot
-    val rewrite = assetType == "METADATA"
     val self = this
-    assets.filter(_.asset_type == assetType).mapPartitions { it =>
+    assets.mapPartitions { it =>
       val conf = new Configuration()
       it.map { a =>
+        val rewrite = a.asset_type == "METADATA"
         val newKey = s"$titlePrefix/${a.version_id}/${basename(a.url)}"
         def attemptOnce(): CopyResult = {
           // source FIRST: a missing/flaky URL (the common failure) must

@@ -631,8 +631,8 @@ class TableStore(spark: SparkSession, root: String,
   }
 
   /** A generation's data files as generation-relative paths (partition
-    * dirs kept). Listed only when a tombstone forces a file-granular
-    * read — the no-merge fast path never pays this. */
+    * dirs kept). Listed at commit and when a tombstone forces a
+    * file-granular read — the no-merge read fast path never pays this. */
   private def listDataFiles(gen: Path): Seq[String] = {
     val f = fs(gen)
     def walk(p: Path): Seq[String] =
@@ -669,7 +669,9 @@ class TableStore(spark: SparkSession, root: String,
     * zone-only one (measured: separate passes doubled ingest wall).
     * O(new data), never re-evaluates the input plan. Stats are an
     * OPTIMIZATION: any failure leaves the generation without them,
-    * which readers treat as must-read — never a commit failure. */
+    * which readers treat as must-read — never a commit failure. A
+    * successful pass deletes the empty part file Spark's task 0 leaves,
+    * unless every file is empty (one must carry the schema). */
   private def writeStats(table: String, tmp: Path, f: FileSystem): Unit =
     try {
       // reading the "_data-" dir warns ("all paths were ignored") but
@@ -689,8 +691,8 @@ class TableStore(spark: SparkSession, root: String,
       val width =
         if (bloomCols.isEmpty) bloomBitsPerFile
         else TableStore.bloomWidthFor(df.count(), bloomBitsPerFile)
-      val (zoneTxt, bloomTxt) = TableStore.computeStats(df, tmp.toString,
-        bloomCols, width, TableStore.bloomHashes)
+      val (zoneTxt, bloomTxt, withRows) = TableStore.computeStats(df,
+        tmp.toString, bloomCols, width, TableStore.bloomHashes)
       // stage-and-rename INSIDE the staged dir: a mid-write failure must
       // not leave a TRUNCATED stats file behind (missing (file, column)
       // lines read as "column absent" = skippable — silently wrong
@@ -704,6 +706,10 @@ class TableStore(spark: SparkSession, root: String,
       }
       stage(TableStore.zoneMapFile, zoneTxt)
       bloomTxt.foreach(stage(TableStore.bloomFile, _))
+      val listed = listDataFiles(tmp).toSet
+      // the subset test: both listings spell the files alike, or no delete
+      if (withRows.nonEmpty && withRows.subsetOf(listed))
+        (listed -- withRows).foreach(rel => f.delete(new Path(tmp, rel), false))
     } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Cluster the table for zone-tight probes: fold the live generations
@@ -1459,8 +1465,8 @@ object TableStore extends org.apache.spark.sql.catalyst.expressions.PredicateHel
   private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
   private def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
 
-  /** The fused stats pass: zone TSV and (when `bloomCols` is non-empty)
-    * Bloom sidecar TSV from ONE `groupBy(input_file_name())` — min/max
+  /** The fused stats pass: zone TSV, Bloom TSV (if `bloomCols`) and the
+    * files holding rows, from ONE `groupBy(input_file_name())` — min/max
     * and sketch aggregates ride the same shuffle-free aggregation
     * (mixed declarative + object-buffer aggregates run under
     * ObjectHashAggregate).
@@ -1476,7 +1482,7 @@ object TableStore extends org.apache.spark.sql.catalyst.expressions.PredicateHel
     * generation. */
   private[gdl] def computeStats(df: DataFrame, genRoot: String,
                                 bloomCols: Seq[String], bloomBits: Int,
-                                bloomHashes: Int): (String, Option[String]) = {
+                                bloomHashes: Int): (String, Option[String], Set[String]) = {
     import org.apache.spark.sql.functions.{max => fmax, min => fmin}
     import org.apache.spark.sql.types._
     val fields = df.schema.fields
@@ -1546,7 +1552,7 @@ object TableStore extends org.apache.spark.sql.catalyst.expressions.PredicateHel
           }
         }.mkString("", "\n", "\n"))
       }
-    (zoneTxt, bloomTxt)
+    (zoneTxt, bloomTxt, perFile.map(p => rel(p._1)).toSet)
   }
 
   /** Commit-time Bloom BUILD width: smallest power of 2 holding ~10

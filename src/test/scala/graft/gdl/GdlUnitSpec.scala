@@ -565,7 +565,7 @@ class ImporterSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("imp-retry").toString
     val imp = new Importer(TestSpark.spark, root)
     val reader = new FlakyReader(Map("mem://a" -> "payload".getBytes), failN = 1)
-    val rows = imp.importAssets(assetsOf("mem://a"), reader, "t-d1", "DATA")
+    val rows = imp.importAssets(assetsOf("mem://a"), reader, "t-d1")
       .collect()
     assert(rows.length == 1)
     assert(rows.head.result_code == "Succeeded", rows.head.result_string)
@@ -581,7 +581,7 @@ class ImporterSpec extends AnyFunSuite {
     val imp = new Importer(TestSpark.spark,
       java.nio.file.Files.createTempDirectory("imp-tmp").toString)
     val reader = new FlakyReader(Map("mem://b" -> "x".getBytes), failN = 99)
-    val rows = imp.importAssets(assetsOf("mem://b"), reader, "t-d1", "DATA",
+    val rows = imp.importAssets(assetsOf("mem://b"), reader, "t-d1",
       maxAttempts = 3).collect()
     assert(rows.head.result_code == "TemporaryFailure")
     assert(FlakyReader.opens.get("mem://b") == 3) // all attempts consumed
@@ -592,8 +592,8 @@ class ImporterSpec extends AnyFunSuite {
     val imp = new Importer(TestSpark.spark,
       java.nio.file.Files.createTempDirectory("imp-perm").toString)
     val reader = new FlakyReader(Map.empty, failN = 0) // not-found always
-    val rows = imp.importAssets(assetsOf("mem://missing"), reader, "t-d1",
-      "DATA").collect()
+    val rows = imp.importAssets(assetsOf("mem://missing"), reader, "t-d1")
+      .collect()
     assert(rows.head.result_code == "PermanentFailure")
     assert(FlakyReader.opens.get("mem://missing") == 1) // never retried
   }
@@ -613,7 +613,7 @@ class ImporterSpec extends AnyFunSuite {
       val root = java.nio.file.Files.createTempDirectory("imp-det").toString
       val imp = new Importer(TestSpark.spark, root)
       val rows = imp.importAssets(assetsOf("mem://c"), new Throwing(mk),
-        "t-d1", "DATA").collect()
+        "t-d1").collect()
       assert(rows.head.result_code == "PermanentFailure", rows.head.result_string)
       // source-open failures must leave NO destination artifact: the
       // old create-dest-first order left an empty file (and a leaked
@@ -636,9 +636,29 @@ class ImporterSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("imp-msg").toString
     val imp = new Importer(TestSpark.spark, root)
     val rows = imp.importAssets(assetsOf("mem://d"),
-      new MsgFlaky(Map("mem://d" -> "ok".getBytes)), "t-d1", "DATA").collect()
+      new MsgFlaky(Map("mem://d" -> "ok".getBytes)), "t-d1").collect()
     assert(rows.head.result_code == "Succeeded", rows.head.result_string)
     assert(FlakyReader.opens.get("mem://d") == 2)
+  }
+
+  test("one pass copies a mixed manifest, rewriting only metadata hrefs") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("imp-mixed").toString
+    val doc = """{"links":[{"href":"s3://b/dir/cat.json","rel":"root"}]}"""
+    val reader = new InMemoryUrlReader(Map(
+      "s3://b/dir/item.json" -> doc.getBytes, "s3://b/dir/raw.json" -> doc.getBytes))
+    val manifest = Seq(
+      ProcessingAssetRow("d1", "v1", "METADATA", 0L, "s3://b/dir/item.json", None),
+      ProcessingAssetRow("d1", "v1", "DATA", 1L, "s3://b/dir/raw.json", Some("x"))).toDS()
+    val rows = new Importer(spark, root).importAssets(manifest, reader, "t-d1")
+      .collect()
+    assert(rows.map(r => (r.asset_type, r.result_code)).toSet ==
+      Set(("METADATA", "Succeeded"), ("DATA", "Succeeded")))
+    def copied(name: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$root/t-d1/v1/$name")))
+    assert(copied("item.json").contains(""""href":"cat.json""""))
+    assert(copied("raw.json") == doc)
   }
 
   test("metadata href rewrite to basenames") {

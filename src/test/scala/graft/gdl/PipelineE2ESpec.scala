@@ -206,6 +206,48 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(latest.filter(col("sfn_status") === "Succeeded").count() == 2)
   }
 
+  test("a clean import appends once to each table it writes") {
+    val tables = java.nio.file.Files.createTempDirectory("gdl-tables").toString
+    val storage = java.nio.file.Files.createTempDirectory("gdl-storage").toString
+    val store = new TableStore(spark, tables)
+    val pipeline = new ImportPipeline(spark, store,
+      new InMemoryUrlReader(stacGraph()), storage, new Random(42))
+    val ds = pipeline.datasets.create("One_Append", t0).toOption.get
+    pipeline.run(ds.id, "s3://staging/data/catalog.json", t0.plusSeconds(60))
+    val generations = Seq("import_executions", "processing_assets",
+      "validation_results", "import_reports")
+      .map(t => t -> store.history(t).size).toMap
+    assert(generations == Map("import_executions" -> 2, "processing_assets" -> 1,
+      "validation_results" -> 1, "import_reports" -> 1))
+  }
+
+  test("a crash in the checksum stage records the crawl's rows and the crash in one append") {
+    val docs = stacGraph() + ("s3://staging/data/item.json" ->
+      s"""{"type":"Feature","stac_version":"1.0.0-rc.3","id":"item1",
+           "id":"item1-dup",
+           "geometry":null,"properties":{"datetime":"2000-01-01T00:00:00Z"},
+           "assets":{"a1":{"href":"asset1.bin",
+                           "file:checksum":"${multihash256(asset1)}"}},
+           "links":[]}""".getBytes(UTF_8))
+    val tables = java.nio.file.Files.createTempDirectory("gdl-tables").toString
+    val storage = java.nio.file.Files.createTempDirectory("gdl-storage").toString
+    val store = new TableStore(spark, tables)
+    val pipeline = new ImportPipeline(spark, store,
+      new BrokenAssetStreamReader(docs), storage, new Random(42))
+    val ds = pipeline.datasets.create("Checksum_Crash", t0).toOption.get
+    val execId = pipeline.run(ds.id, "s3://staging/data/catalog.json",
+      t0.plusSeconds(60)).toOption.get
+    val report = new ImportStatus(spark, store).get(execId).toOption.get
+    assert(report.validation.status == "Failed")
+    assert(report.validation.errors.map(_.check).sorted ==
+      Seq(Check.DuplicateObjectKey, "pipeline"))
+    assert(report.validation.errors.find(_.check == "pipeline").get
+      .details("message").contains("injected read failure"))
+    assert(report.metadataUpload.status == "Skipped")
+    assert(report.assetUpload.status == "Skipped")
+    assert(store.history("validation_results").size == 1)
+  }
+
   test("deep Draft-7 violations fail validation with format/oneOf messages") {
     // ≙ the reference's FormatChecker + item.json oneOf depth
     // (stac_validators.py:26, test_check_stac_metadata.py:395-400):
@@ -281,4 +323,20 @@ private class FlakyAsset1Reader(docs: Map[String, Array[Byte]])
       throw new java.net.SocketTimeoutException("injected copy failure")
     super.open(url)
   }
+}
+
+/** Asset streams serve a few bytes and then throw an unchecked
+  * exception, so the checksum stage's task fails mid-read. */
+private class BrokenAssetStreamReader(docs: Map[String, Array[Byte]])
+    extends InMemoryUrlReader(docs) {
+  override def open(url: String): java.io.InputStream =
+    if (!url.endsWith(".bin")) super.open(url)
+    else new java.io.FilterInputStream(super.open(url)) {
+      private var reads = 0
+      override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        reads += 1
+        if (reads > 1) throw new IllegalStateException("injected read failure")
+        super.read(b, off, math.min(len, 4))
+      }
+    }
 }

@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - every file the scan opens belongs to the current snapshot;
   *  - `scanFileCounts(t, p)` is (files the scan opens, files in the
   *    snapshot), with or without stats — the counters report the
-  *    decision the scan made, not a separate estimate.
+  *    decision the scan made, not a separate estimate;
+  *  - every live file of a generation with stats holds a row: its zone
+  *    map lists it.
   * Partition values stay ASCII: they become directory names, which a
   * JVM started without a UTF-8 `sun.jnu.encoding` cannot create. */
 class ScanPruningSpec extends AnyFunSuite {
@@ -157,11 +159,29 @@ class ScanPruningSpec extends AnyFunSuite {
     df.select(df.columns.sorted.map(col): _*).collect()
       .map(_.toSeq.toList).groupBy(identity).map { case (r, rs) => r -> rs.length }
 
+  private val genFile = "(.*/_data-[^/]+)/(.+)".r
+
+  /** Every live file of a generation that has a zone map is one the map
+    * lists, i.e. one that holds a row. A commit with no rows at all
+    * keeps its schema-bearing file and lists none. */
+  private def assertSidecarsCover(snapshot: Set[String], clue: String): Unit =
+    snapshot.toSeq.collect { case genFile(dir, rel) => (dir, rel) }
+      .groupBy(_._1).foreach { case (dir, files) =>
+        val zm = new java.io.File(dir, TableStore.zoneMapFile)
+        if (zm.exists) {
+          val listed = TableStore.parseZoneMap(new String(
+            java.nio.file.Files.readAllBytes(zm.toPath), "UTF-8")).keySet
+          if (listed.nonEmpty)
+            assert(files.map(_._2).toSet.subsetOf(listed), s"$dir: $clue")
+        }
+      }
+
   private def check(partitioned: Boolean, bloom: Boolean, seed: Long): Unit = {
     val h = sample(history(partitioned, bloom), seed)
     val (store, withV) = build(h)
     val full = store.read("t").get
     val snapshot = StoreFiles.snapshot(store, "t")
+    assertSidecarsCover(snapshot, s"seed $seed, $h")
     (0 until 8).foreach { i =>
       val p = sample(predicate(withV, 2), seed * 1000 + i)
       val clue = s"seed $seed, $h, predicate $p"
