@@ -79,6 +79,12 @@ object GraftExtensions {
     functions.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
+    registerPlanner(spark)
+  }
+
+  /** Add the as-of join planner strategy and its key-pushdown optimizer
+    * rule to an already-built session; idempotent. */
+  def registerPlanner(spark: org.apache.spark.sql.SparkSession): Unit = {
     if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy

@@ -24,8 +24,10 @@ class DatasetService(spark: SparkSession, store: TableStore,
 
   def list(): Seq[DatasetRow] = all().sortBy(_.id)
 
-  def get(id: String): Either[String, DatasetRow] =
-    all().find(_.id == id)
+  def get(id: String): Either[String, DatasetRow] = byId(all(), id)
+
+  private def byId(rows: Seq[DatasetRow], id: String): Either[String, DatasetRow] =
+    rows.find(_.id == id)
       .toRight(s"dataset '$id' does not exist") // get.py:46-51
 
   def getByTitle(title: String): Either[String, DatasetRow] =
@@ -61,13 +63,14 @@ class DatasetService(spark: SparkSession, store: TableStore,
       try Right(Timestamp.from(Instant.parse(s)))
       catch { case _: Exception => Left(s"$name '$s' is not an ISO-8601 instant") }
 
+    lazy val rows = all() // one catalog read serves both checks
     attrs.get("title") match {
       case Some(t) if !Ulid.validTitle(t) =>
         Left(s"title '$t' does not match '${Ulid.TitlePattern}'")
-      case Some(t) if all().exists(d => d.title == t && d.id != id) =>
+      case Some(t) if rows.exists(d => d.title == t && d.id != id) =>
         Left(s"dataset '$t' already exists") // update.py:29-33
       case _ =>
-        get(id).flatMap { row =>
+        byId(rows, id).flatMap { row =>
           val titled = attrs.get("title").fold(row)(t => row.copy(title = t))
           for {
             created <- attrs.get("created_at")

@@ -82,9 +82,7 @@ import org.apache.spark.sql.functions.{coalesce, col, desc, input_file_name, lit
   *                     FPP) and each file's sidecar is then OR-folded
   *                     down to its own count ([[TableStore.shrinkBloom]])
   *                     — a small delta pays small-delta buffers, and a
-  *                     250k-row bin-packed file still prunes (the old
-  *                     FIXED 2^18 width silently fell to ~2.6 bits/row
-  *                     past ~26k rows/file and passed everything). The
+  *                     250k-row bin-packed file still prunes. The
   *                     default cap 2^25 bounds the transient build
   *                     buffer at 4 MiB per file × column (shuffled once
   *                     as partial-agg state; a task reads ~1 file under
@@ -99,6 +97,7 @@ class TableStore(spark: SparkSession, root: String,
                  partitioning: Map[String, Seq[String]] = TableStore.defaultPartitioning,
                  bloomColumns: Map[String, Seq[String]] = TableStore.defaultBloomColumns,
                  bloomBitsPerFile: Int = 1 << 25) {
+  import TableStore.{PointerGone, PointerOk, PointerRead, PointerTorn, PointerUnreadable}
   require(bloomBitsPerFile > 0, "bloomBitsPerFile must be positive")
 
   private def layout(table: String): Seq[String] =
@@ -149,22 +148,6 @@ class TableStore(spark: SparkSession, root: String,
     * so a long-lived driver doesn't grow the map across generations. */
   private val pointerCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]
-
-  /** The four observable states of a pointer file. The distinction that
-    * matters for safety: [[PointerTorn]] (content read fine but is
-    * malformed — a crashed writer's torn write on a filesystem where
-    * create, write and close are separate steps) is the
-    * ONLY reclaimable state, and only once aged past the gc grace.
-    * [[PointerUnreadable]] (the read itself failed after retries)
-    * proves nothing — the pointer may be a fully COMMITTED rival whose
-    * deletion would orphan acknowledged rows for gc to silently
-    * reclaim — so it is never deleted, by anyone. */
-  private sealed trait PointerRead
-  private final case class PointerOk(kind: String, dataDir: String)
-      extends PointerRead
-  private case object PointerTorn extends PointerRead
-  private case object PointerGone extends PointerRead
-  private case object PointerUnreadable extends PointerRead
 
   /** Read a pointer file, distinguishing torn content from a failed
     * read. Transient IO errors are retried with bounded EXPONENTIAL
@@ -284,7 +267,13 @@ class TableStore(spark: SparkSession, root: String,
   /** A generation chain with its tombstones resolved once: `gone(g)` are
     * g's files a row-level [[merge]]/[[deleteWhere]] rewrote (they must
     * not be read). Only merges INSIDE the chain apply — which is what
-    * makes [[readAt]] time travel exact for free. */
+    * makes [[readAt]] time travel exact for free.
+    *
+    * The only reader of committed parquet: each generation's directory
+    * is read at most once (its one schema-inference job), and every
+    * narrower read of it takes that schema — no inference job, and
+    * `col=value/` partition columns keep the whole generation's types.
+    * A generation whose every file was rewritten away is never read. */
   private final class Chain(val gens: Seq[(Long, String, Path)]) {
     private val replaced: Map[String, Set[String]] =
       gens.filter(_._2 == TableStore.mergeKind).flatMap(g => readReplaces(g._3))
@@ -293,39 +282,40 @@ class TableStore(spark: SparkSession, root: String,
     def gone(g: (Long, String, Path)): Set[String] =
       replaced.getOrElse(g._3.getName, Set.empty)
 
+    private def liveFiles(g: (Long, String, Path)): Seq[String] =
+      listDataFiles(g._3).filterNot(gone(g)).sorted
+
+    private val dirReads = scala.collection.mutable.Map.empty[Path, DataFrame]
+    private def dirRead(g: (Long, String, Path)): DataFrame =
+      dirReads.getOrElseUpdate(g._3, spark.read.parquet(g._3.toString))
+
+    /** Generation-relative `files` of `g` under its basePath, with `g`'s
+      * schema; None for no files. */
+    def readFiles(g: (Long, String, Path), files: Iterable[String]): Option[DataFrame] =
+      if (files.isEmpty) None
+      else Some(spark.read.schema(dirRead(g).schema).option("basePath", g._3.toString)
+        .parquet(files.toSeq.sorted.map(f => new Path(g._3, f).toString): _*))
+
+    /** Each generation's surviving rows, by data dir: the directory read
+      * when nothing in it was tombstoned, its live files otherwise. */
+    lazy val parts: Map[Path, DataFrame] = gens.flatMap { g =>
+      (if (gone(g).isEmpty) Some(dirRead(g)) else readFiles(g, liveFiles(g)))
+        .map(g._3 -> _)
+    }.toMap
+
     /** The chain's rows. The last generation can never be tombstoned by
       * anything inside the chain, so the parts are non-empty whenever
       * `gens` is. Schema evolution: a generation written before a column
       * existed reads as null for that column (old and new generations
       * stay jointly readable; consumers of evolved columns coalesce
       * defaults). */
-    lazy val table: DataFrame =
-      gens.flatMap(g => readGeneration(g, gone(g)))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
+    lazy val table: DataFrame = gens.flatMap(g => parts.get(g._3))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
 
     /** The chain's data files as absolute paths, in generation order. */
-    def files: Seq[String] = gens.flatMap { g =>
-      listDataFiles(g._3).filterNot(gone(g)).sorted
-        .map(f => new Path(g._3, f).toString)
-    }
+    def files: Seq[String] =
+      gens.flatMap(g => liveFiles(g).map(f => new Path(g._3, f).toString))
   }
-
-  /** One generation's surviving contents: a whole-dir read when none of
-    * its files were tombstoned (fast path — normal partition
-    * discovery), an explicit file list otherwise, None when every file
-    * was rewritten away. */
-  private def readGeneration(g: (Long, String, Path),
-                             gone: Set[String]): Option[DataFrame] =
-    if (gone.isEmpty) Some(spark.read.parquet(g._3.toString))
-    else readFiles(g._3, listDataFiles(g._3).filterNot(gone))
-
-  /** Generation-relative `files` of generation dir `gen`, read under its
-    * basePath so `col=value/` partition columns still resolve; None for
-    * no files. */
-  private def readFiles(gen: Path, files: Iterable[String]): Option[DataFrame] =
-    if (files.isEmpty) None
-    else Some(spark.read.option("basePath", gen.toString)
-      .parquet(files.toSeq.sorted.map(f => new Path(gen, f).toString): _*))
 
   /** Current table contents, or None if never written. */
   def read(table: String): Option[DataFrame] = {
@@ -524,16 +514,15 @@ class TableStore(spark: SparkSession, root: String,
   }
 
   /** True iff `column` exists in the parquet schema of EVERY live
-    * generation of `table` (false for an absent table). Footer-only —
-    * no data rows are read. The soundness gate for physical pruning on
-    * an EVOLVED column: old generations read the column as null via
-    * unionByName, so a `col IN (...)` scan predicate would silently
-    * drop every pre-evolution row; callers must fall back to an
-    * unpruned read when this is false. */
+    * generation of `table` that still holds rows (false for an absent
+    * table). Footer-only — no data rows are read. The soundness gate for
+    * physical pruning on an EVOLVED column: old generations read the
+    * column as null via unionByName, so a `col IN (...)` scan predicate
+    * would silently drop every pre-evolution row; callers must fall
+    * back to an unpruned read when this is false. */
   def columnInAllGenerations(table: String, column: String): Boolean = {
-    val gens = liveGenerations(table)
-    gens.nonEmpty && gens.forall(g =>
-      spark.read.parquet(g._3.toString).schema.fieldNames.contains(column))
+    val chain = new Chain(liveGenerations(table))
+    chain.gens.nonEmpty && chain.parts.values.forall(_.schema.fieldNames.contains(column))
   }
 
   /** THE pruning decision of every predicate read ([[scan]],
@@ -558,22 +547,20 @@ class TableStore(spark: SparkSession, root: String,
       val listed = zm.map(_.keySet).orElse(bf.map(_.keySet))
         .fold(0)(files => (files -- gone).size)
       val kept = TableStore.prunedFiles(zm, bounds, bf, eqs).map(_ -- gone)
-      TableStore.GenPlan(g, gone, kept, listed)
+      TableStore.GenPlan(g, kept, listed)
     }
   }
 
-  /** `chain` read through [[prunePlan]]: per generation all files
-    * (read the dir — cheapest, normal partition discovery), a subset
-    * (read under the generation's basePath), or none (skipped
-    * entirely); the FULL predicate then filters whatever was read. */
+  /** `chain` read through [[prunePlan]]: per generation the chain's own
+    * read when the sidecars keep every live file (or there are none), a
+    * subset read with the generation's schema, or nothing; the FULL
+    * predicate then filters whatever was read. */
   private def readWhere(chain: Chain, predicate: Column): DataFrame = {
     val full = chain.table.filter(predicate)
     val parts = prunePlan(chain, full).flatMap { p =>
       p.kept match {
-        case None => readGeneration(p.gen, p.gone)
-        case Some(files) if p.gone.isEmpty && files.size == p.listed =>
-          Some(spark.read.parquet(p.gen._3.toString))
-        case Some(files) => readFiles(p.gen._3, files)
+        case Some(files) if files.size < p.listed => chain.readFiles(p.gen, files)
+        case _ => chain.parts.get(p.gen._3)
       }
     }
     // Anchor the union on the FULL schema (zero rows): if every
@@ -770,9 +757,7 @@ class TableStore(spark: SparkSession, root: String,
     // Best-effort: the append itself has already committed, so a
     // compaction hiccup (e.g. a concurrent writer's gc) must not turn a
     // successful append into a failure — the next append retries anyway.
-    val gens = TableStore.dropFoldCovered(generations(table))
-    val lastFull = gens.lastIndexWhere(g => isFullKind(g._2))
-    val tail = gens.drop(lastFull + 1)
+    val tail = liveGenerations(table).dropWhile(g => isFullKind(g._2))
     try {
       if (tail.size > 2 * autoCompactDeltas) compact(table)
       else if (tail.reverse.takeWhile(_._2 == "delta").size > autoCompactDeltas) {
@@ -824,15 +809,15 @@ class TableStore(spark: SparkSession, root: String,
       attempts += 1
       val gens = liveGenerations(table)
       if (gens.isEmpty) { append(table, updates); return }
-      val cur = new Chain(gens).table
+      val chain = new Chain(gens)
       val keys = updates.select(keyCols.map(col): _*).distinct()
-      val affectedAbs = cur.withColumn("_gf", input_file_name())
+      val affectedAbs = chain.table.withColumn("_gf", input_file_name())
         .join(keys, keyCols).select("_gf").distinct()
         .collect().map(_.getString(0)).toSeq
       val replaces = TableStore.groupByGeneration(gens, affectedAbs)
       val newRows =
         if (replaces.isEmpty) updates // pure insert, but still slot-guarded
-        else affectedRows(gens, replaces)
+        else affectedRows(chain, replaces)
           .join(keys, keyCols.toSeq, "left_anti")
           .unionByName(updates, allowMissingColumns = true)
       val kind = if (replaces.isEmpty) "delta" else TableStore.mergeKind
@@ -858,7 +843,8 @@ class TableStore(spark: SparkSession, root: String,
       attempts += 1
       val gens = liveGenerations(table)
       if (gens.isEmpty) return
-      val affectedAbs = readWhere(new Chain(gens), predicate)
+      val chain = new Chain(gens)
+      val affectedAbs = readWhere(chain, predicate)
         .withColumn("_gf", input_file_name())
         .select("_gf").distinct().collect().map(_.getString(0)).toSeq
       if (affectedAbs.isEmpty) return // nothing matches: no-op, no commit
@@ -867,7 +853,7 @@ class TableStore(spark: SparkSession, root: String,
       // TRUE; a NULL-evaluating row is KEPT (bare !predicate would
       // evaluate NULL and silently drop it)
       val keep = !coalesce(predicate, lit(false))
-      val newRows = affectedRows(gens, replaces).filter(keep)
+      val newRows = affectedRows(chain, replaces).filter(keep)
       val done =
         try commit(table, newRows, TableStore.mergeKind,
           expectedSeq = Some(gens.last._1 + 1), replaces = replaces)
@@ -878,12 +864,12 @@ class TableStore(spark: SparkSession, root: String,
       s"deleteWhere on '$table' lost the commit race $attempts times")
   }
 
-  /** The full contents of the to-be-rewritten files, read explicitly
-    * under each generation's basePath. */
-  private def affectedRows(gens: Seq[(Long, String, Path)],
+  /** The full contents of the to-be-rewritten files, each read with its
+    * generation's schema. */
+  private def affectedRows(chain: Chain,
                            replaces: Map[String, Set[String]]): DataFrame =
     replaces.toSeq.sortBy(_._1).flatMap { case (genName, rels) =>
-      readFiles(gens.find(_._3.getName == genName).get._3, rels)
+      chain.readFiles(chain.gens.find(_._3.getName == genName).get, rels)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** Compaction: fold the current generations into one full generation
@@ -1006,15 +992,17 @@ class TableStore(spark: SparkSession, root: String,
     val dir = tableDir(table)
     val f = fs(dir)
     // INCLUSIVE age test (mtime <= cutoff ⇒ age >= grace): gcGraceMs
-    // is a MINIMUM age, and the strict form made gcGraceMs = 0
-    // non-deterministic — a generation superseded in the same
-    // millisecond as the sweep (fast box, in-commit gc) was never
-    // reclaimable in that sweep, which flaked the zero-grace specs
+    // is a MINIMUM age, so at zero grace a generation superseded in the
+    // same millisecond as the sweep is reclaimed by it
     val cutoff = System.currentTimeMillis() - gcGraceMs
     // a generation's age is its POINTER's mtime — the commit instant
     // (the data dir was staged earlier)
     def mtimeOf(g: (Long, String, Path)): Long =
       f.getFileStatus(pointerPath(table, g._1)).getModificationTime
+    // a pointer deleted since the listing (a racing gc) is not aged
+    def aged(g: (Long, String, Path)): Boolean =
+      try mtimeOf(g) <= cutoff
+      catch { case _: java.io.FileNotFoundException => false }
     // Strays: (a) torn pointers a crashed writer left (created but
     // unparseable — cannot happen on a real conditional PUT, handled
     // for the filesystem emulation); (b) staged `_data-` dirs whose
@@ -1082,12 +1070,8 @@ class TableStore(spark: SparkSession, root: String,
     // foldDeltas refuse in that state, but a generation committed just
     // before the fault must not trigger reclamation around the hidden
     // slot). Skipping a sweep is always safe.
-    if (lastFull > 0 && !anyUnreadable) {
-      val fullOld =
-        try mtimeOf(gens(lastFull)) <= cutoff
-        catch { case _: java.io.FileNotFoundException => false }
-      if (fullOld) gens.take(lastFull).foreach(rm)
-    }
+    if (lastFull > 0 && !anyUnreadable && aged(gens(lastFull)))
+      gens.take(lastFull).foreach(rm)
     // fold-covered originals: reclaimable once the FOLD has aged past
     // the grace period (the fold's commit is when they became
     // superseded — their own mtime is arbitrarily old, and a reader
@@ -1097,11 +1081,7 @@ class TableStore(spark: SparkSession, root: String,
     val folds = if (anyUnreadable) Seq.empty else gens.flatMap(g =>
       TableStore.foldStart(g._2).map(c => (c, g)))
     folds.foreach { case (c, fg) =>
-      val foldOld =
-        try mtimeOf(fg) <= cutoff
-        catch { case _: java.io.FileNotFoundException => false }
-      if (foldOld)
-        gens.filter(g => g._1 >= c && g._1 < fg._1).foreach(rm)
+      if (aged(fg)) gens.filter(g => g._1 >= c && g._1 < fg._1).foreach(rm)
     }
   }
 
@@ -1297,14 +1277,30 @@ object TableStore extends org.apache.spark.sql.catalyst.expressions.PredicateHel
   private[gdl] val bloomFile = "_bloom.tsv"
   private[gdl] val replacesFile = "_replaces.tsv"
 
+  /** The four observable states of a pointer file. The distinction that
+    * matters for safety: [[PointerTorn]] (content read fine but is
+    * malformed — a crashed writer's torn write on a filesystem where
+    * create, write and close are separate steps) is the
+    * ONLY reclaimable state, and only once aged past the gc grace.
+    * [[PointerUnreadable]] (the read itself failed after retries)
+    * proves nothing — the pointer may be a fully COMMITTED rival whose
+    * deletion would orphan acknowledged rows for gc to silently
+    * reclaim — so it is never deleted, by anyone. */
+  private sealed trait PointerRead
+  private final case class PointerOk(kind: String, dataDir: String)
+      extends PointerRead
+  private case object PointerTorn extends PointerRead
+  private case object PointerGone extends PointerRead
+  private case object PointerUnreadable extends PointerRead
+
   /** Generation kind written by [[TableStore.merge]]/[[TableStore.deleteWhere]]:
     * carries rewritten rows + a tombstone list hiding the originals. */
   private[gdl] val mergeKind = "merge"
 
-  /** One generation's part in a predicate read: its tombstoned files,
-    * the files its sidecars cannot exclude (None = no stats: read the
-    * whole generation) and how many live files the sidecars list. */
-  private final case class GenPlan(gen: (Long, String, Path), gone: Set[String],
+  /** One generation's part in a predicate read: the live files its
+    * sidecars cannot exclude (None = no stats: read the whole
+    * generation) and how many live files the sidecars list. */
+  private final case class GenPlan(gen: (Long, String, Path),
                                    kept: Option[Set[String]], listed: Int)
 
   /** A fold generation's kind is `fold<coveredFromSeq>`: the generation

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy}
+import graft.plans.AsOfJoinPlan
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
@@ -84,12 +84,7 @@ object AsOfJoin {
   def backwardPlanned(left: DataFrame, right: DataFrame, keys: Seq[String],
                       tsCol: String, rightPayload: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.AsOfJoinKeyPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.AsOfJoinKeyPushdown
+    graft.GraftExtensions.registerPlanner(spark)
 
     val lPlan = left.queryExecution.analyzed
     val rAnalyzed = right.queryExecution.analyzed

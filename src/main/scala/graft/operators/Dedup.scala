@@ -549,7 +549,7 @@ object Dedup {
       .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
       .localCheckpoint(eager = true)
     p.unpersist(blocking = false) // edges is materialized; pairs cache done
-    var labels = edges.select(col("src").as("id")).distinct()
+    val labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
       .withColumn("old", col("id"))
       .localCheckpoint(eager = true)

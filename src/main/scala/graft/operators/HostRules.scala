@@ -207,10 +207,6 @@ object HostRules {
     val parts = split(regexp_replace(path, "^/", ""), "/")
     val k = size(parts)
     val kCap = least(k, lit(maxSegs))
-    def litLen(rule: Column) = length(translate(rule, "*$", ""))
-    def nStars(rule: Column) =
-      length(rule) - length(translate(rule, "*", ""))
-    def actRank(a: Column) = when(a === "allow", 0).otherwise(1)
     // a rule matches iff its text equals one of the join variant's
     // generated probe keys — re-derived here per rule: segment-wise
     // literal/star alignment over the rule's own depth, full-depth

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Trained language identification — a fastText-style linear classifier

@@ -367,8 +367,6 @@ object EventOps {
     "q101_scd2_intervals" -> ((s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-      val wi = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id"), col("grp"))
       val ev = Tables.load(s, d, "events")
         .filter(col("user_id") < 100L)
         .select(col("user_id"), col("event_id"),

@@ -2,6 +2,7 @@ package graft.gdl
 
 import graft.TestSpark
 import graft.gdl.expr.BloomSidecar
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -53,6 +54,19 @@ class BloomSidecarSpec extends AnyFunSuite {
     // the observability hook reports the same decision the scan made
     val (kept, listed) = store.scanFileCounts("t", $"id" === needle)
     assert(listed == 12 && kept == got.inputFiles.length)
+  }
+
+  test("a pruned scan launches no more Spark jobs than a full read") {
+    val store = freshStore(bloom = true)
+    threeGens(store)
+    val sc = spark.sparkContext
+    val (_, readJobs) = JobCount(sc)(store.read("t").get.collect())
+    val needle = "6x0153"
+    val (got, scanJobs) = JobCount(sc)(rows(store.scan("t", $"id" === needle).get))
+    assert(got == Set((needle, 153L)))
+    // each generation's schema is inferred once, by the chain's read;
+    // the Bloom-kept file subset reuses it instead of inferring again
+    assert(scanJobs <= readJobs, s"scan ran $scanJobs jobs, read $readJobs")
   }
 
   test("absent key reads zero files but keeps schema and filter semantics") {

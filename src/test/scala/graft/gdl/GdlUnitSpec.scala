@@ -512,6 +512,23 @@ class DatasetServiceSpec extends AnyFunSuite {
     assert(svc.get(d.id).toOption.get == r2)
   }
 
+  test("a PATCH reads the catalog once") {
+    val root = java.nio.file.Files.createTempDirectory("cat").toString
+    var reads = 0
+    val store = new TableStore(spark, root) {
+      override def read(table: String) = {
+        if (table == "datasets") reads += 1
+        super.read(table)
+      }
+    }
+    val svc = new DatasetService(spark, store, new Random(7))
+    val d = svc.create("T3", t0).toOption.get
+    reads = 0
+    val r = svc.updateAttributes(d.id, Map("title" -> "T3_renamed"), t0.plusSeconds(60))
+    assert(r.map(_.title) == Right("T3_renamed"))
+    assert(reads == 1) // title check and row lookup share one read
+  }
+
   test("duplicate title and bad charset rejected") {
     val (svc, _) = freshService()
     assert(svc.create("T1", t0).isRight)

@@ -188,6 +188,22 @@ class MergeSpec extends AnyFunSuite {
     assert(after.size == 301 - 1) // 300 originals, 2 updated in place
   }
 
+  test("tombstone survivors keep their generation's partition types") {
+    val store = new TableStore(spark,
+      java.nio.file.Files.createTempDirectory("mergepart").toString,
+      partitioning = Map("t" -> Seq("p")))
+    store.append("t", Seq(("r1", "007"), ("r2", "a")).toDF("id", "p"))
+    val mergeFiles = added(store, "t")(
+      store.merge("t", Seq(("r2", "a")).toDF("id", "p"), Seq("id")))
+    assert(store.history("t").map(_._2) == Seq("delta", "merge"))
+    // the merge tombstoned the p=a file; the surviving p=007 file alone
+    // would infer p as an integer and the union would cast "a" to it
+    val read = store.read("t").get
+    assert(opened(read).count(f => !mergeFiles(f)) == 1)
+    assert(read.as[(String, String)].collect().toSet ==
+      Set(("r1", "007"), ("r2", "a")))
+  }
+
   test("tombstone serialization roundtrip; corrupt line fails loudly") {
     val m = Map("_data-0001" -> Set("part-1.parquet", "ds=a/part-2.parquet"))
     assert(TableStore.parseReplaces(TableStore.serializeReplaces(m)) == m)

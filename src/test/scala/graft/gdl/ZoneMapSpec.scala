@@ -193,6 +193,24 @@ class ZoneMapSpec extends AnyFunSuite {
     assert(got.select("id").as[Long].collect().toSeq == Seq(3L))
   }
 
+  test("a pruned file subset reads its generation's partition types") {
+    val store = new TableStore(spark,
+      java.nio.file.Files.createTempDirectory("zonemap-pt").toString,
+      partitioning = Map("t" -> Seq("p")))
+    store.append("t", Seq(("r1", "007"), ("r2", "a")).toDF("id", "p"))
+    val hit = $"p" === "007"
+    val got = store.scan("t", hit).get
+    // the zone map keeps only the p=007 file; read on its own, its path
+    // would infer p as an integer (7)
+    assert(got.inputFiles.length == 1)
+    assert(got.schema("p").dataType == org.apache.spark.sql.types.StringType)
+    val full = store.read("t").get
+    assert(full.schema("p").dataType == org.apache.spark.sql.types.StringType)
+    val expected = full.filter(hit).as[(String, String)].collect().toSeq
+    assert(expected == Seq(("r1", "007")))
+    assert(got.as[(String, String)].collect().toSeq == expected)
+  }
+
   test("clustering rewrite turns an unskippable probe into O(matching files)") {
     val store = freshStore()
     // interleave keys across appends: every generation (and most files)
