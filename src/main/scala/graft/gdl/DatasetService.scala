@@ -92,7 +92,7 @@ class DatasetService(spark: SparkSession, store: TableStore,
   /** Delete; guarded by "no stored versions" ≙ the S3 prefix emptiness
     * check MaxKeys=1 (delete.py:37-45, O-11) against the manifest table. */
   def delete(id: String): Either[String, Unit] =
-    get(id).flatMap { row =>
+    get(id).flatMap { _ =>
       // processing_assets is partitioned on dataset_id: the probe prunes
       if (store.probeExists("processing_assets", col("dataset_id") === id))
         Left(s"dataset '$id' has existing versions") // delete.py:41-45

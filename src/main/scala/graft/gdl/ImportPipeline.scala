@@ -132,7 +132,7 @@ class ImportPipeline(spark: SparkSession, store: TableStore,
         .filter($"dataset_id" === dataset.id && $"version_id" === versionId)
         .as[ProcessingAssetRow]
       // persisted: the copy runs once, in the report append; statuses read the cache
-      val results = new Importer(spark, storageRoot)
+      val results = new Importer(storageRoot)
         .importAssets(manifest, reader, s"${dataset.title}-${dataset.id}")
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {

@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 
 /** Versioned import into the storage layout
   * `{title}-{dataset_id}/{version_id}/{basename}` ≙ the reference's
@@ -29,7 +29,7 @@ final case class CopyResult(
     dataset_id: String, version_id: String, asset_type: String, url: String,
     new_key: String, result_code: String, result_string: String)
 
-class Importer(spark: SparkSession, storageRoot: String) extends Serializable {
+class Importer(storageRoot: String) extends Serializable {
 
   private def basename(url: String): String =
     url.substring(url.lastIndexOf('/') + 1)
@@ -40,7 +40,7 @@ class Importer(spark: SparkSession, storageRoot: String) extends Serializable {
     val root = mapper.readTree(json)
     root.get("assets") match {
       case obj: ObjectNode =>
-        obj.fields().forEachRemaining { e =>
+        obj.properties().forEach { e =>
           e.getValue match {
             case a: ObjectNode if a.has("href") =>
               a.put("href", basename(a.get("href").asText)): Unit

@@ -163,7 +163,7 @@ class StacCrawler(reader: UrlReader,
       metadataUrls += url
       val assetsNode = doc.get("assets")
       if (assetsNode != null && assetsNode.isObject) {
-        val it = assetsNode.fields()
+        val it = assetsNode.properties().iterator()
         while (it.hasNext) {
           val a = it.next().getValue
           assets += ((resolve(a.get("href").asText, url), a.get("file:checksum").asText))

@@ -5,19 +5,23 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.{coalesce, col, desc, input_file_name, lit,
   row_number}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Parquet-backed table store with atomic, generation-versioned commits —
   * the engine's replacement for the reference's three DynamoDB tables
   * (infrastructure/storage_stack.py:62-95) in an offline build without a
   * table format like Delta/Iceberg.
   *
-  * Layout per table: data dirs `root/<table>/_data-<uuid>/part-*.parquet`
-  * and one pointer file per generation, `root/<table>/_commits/g<seq>`,
-  * whose content is `<kind>\n<data dir name>`. Readers list the pointers
-  * and union the newest `full` generation with every later `delta`.
+  * Layout per table: data dirs `root/<table>/_data-<uuid>/part-*.parquet`,
+  * each with the writer's schema in `_schema.json` (Spark's
+  * `StructType.json`, partition columns at the writer's types), and one
+  * pointer file per generation, `root/<table>/_commits/g<seq>`, whose
+  * content is `<kind>\n<data dir name>`. Readers list the pointers and
+  * union the newest `full` generation with every later `delta`, reading
+  * each generation with its recorded schema — no read infers one.
   *
   * Commit protocol (one, on every filesystem): stage the data dir, its
-  * stats and its tombstones in place, then publish with ONE
+  * schema, stats and tombstones in place, then publish with ONE
   * create-exclusive write of the pointer for the next seq — the
   * semantic an S3 conditional PUT (If-None-Match: *) provides and
   * HDFS/local `create(overwrite = false)` provides natively. Invariants:
@@ -97,7 +101,7 @@ class TableStore(spark: SparkSession, root: String,
                  partitioning: Map[String, Seq[String]] = TableStore.defaultPartitioning,
                  bloomColumns: Map[String, Seq[String]] = TableStore.defaultBloomColumns,
                  bloomBitsPerFile: Int = 1 << 25) {
-  import TableStore.{PointerGone, PointerOk, PointerRead, PointerTorn, PointerUnreadable}
+  import TableStore.{Gen, PointerGone, PointerOk, PointerRead, PointerTorn, PointerUnreadable}
   require(bloomBitsPerFile > 0, "bloomBitsPerFile must be positive")
 
   private def layout(table: String): Seq[String] =
@@ -206,22 +210,16 @@ class TableStore(spark: SparkSession, root: String,
     }
   }
 
-  /** Option view for callers that only need a complete pointer; a
-    * vanished / torn / unreadable pointer all read as None (listing
-    * callers skip the entry — with the in-place retries above, an
-    * unreadable COMMITTED pointer skipping out of a listing needs a
-    * persistent, not transient, IO fault). */
-  private def readPointer(f: FileSystem, p: Path): Option[(String, String)] =
-    readPointerState(f, p) match {
-      case PointerOk(kind, dir) => Some((kind, dir))
-      case _                    => None
-    }
+  /** The mtime at or before which a torn pointer ([[isDebris]]) or an
+    * unreferenced stage is a dead writer's debris: older than the gc
+    * grace AND [[TableStore.stagingMs]]. A live writer's pointer is torn
+    * between create and close, its stage unreferenced until the pointer
+    * publishes; the (reader) grace says nothing about how long that is. */
+  private def debrisBefore: Long =
+    System.currentTimeMillis() - math.max(gcGraceMs, TableStore.stagingMs)
 
-  /** Has this pointer file sat on disk at least the gc grace period?
-    * (Same inclusive age test as [[gc]]; unknown mtime = not aged.) */
-  private def pointerAgedPastGrace(f: FileSystem, p: Path): Boolean =
-    try f.getFileStatus(p).getModificationTime <=
-      System.currentTimeMillis() - gcGraceMs
+  private def isDebris(f: FileSystem, p: Path): Boolean =
+    try f.getFileStatus(p).getModificationTime <= debrisBefore
     catch { case _: java.io.IOException => false }
 
   /** Delete a pointer file best-effort and evict its cache entry. Only
@@ -234,20 +232,21 @@ class TableStore(spark: SparkSession, root: String,
   }
 
   /** The committed generations, ascending seq: one per complete
-    * pointer (the pointer name owns its slot, so seqs are unique). */
-  private def generations(table: String): Seq[(Long, String, Path)] = {
+    * pointer (the pointer name owns its slot, so seqs are unique). A
+    * vanished, torn or unreadable pointer is skipped — with the
+    * in-place retries above, an unreadable COMMITTED pointer skipping
+    * out of a listing needs a persistent, not transient, IO fault. */
+  private def generations(table: String): Seq[Gen] = {
     val dir = tableDir(table)
     val cd = commitsDir(table)
     val f = fs(dir)
     if (!f.exists(cd)) Seq.empty
-    else f.listStatus(cd).toSeq.filter(_.isFile)
-      .flatMap { s =>
-        for {
-          seq <- pointerSeq(s.getPath.getName)
-          (kind, dataName) <- readPointer(f, s.getPath)
-        } yield (seq, kind, new Path(dir, dataName))
-      }
-      .sortBy(_._1)
+    else f.listStatus(cd).toSeq.filter(_.isFile).flatMap { s =>
+      pointerSeq(s.getPath.getName).flatMap(seq => readPointerState(f, s.getPath) match {
+        case PointerOk(kind, dataName) => Some((seq, kind, new Path(dir, dataName)))
+        case _ => None
+      })
+    }.sortBy(_._1)
   }
 
   /** "full" (overwrite) and "comp" (compaction) generations both contain
@@ -258,7 +257,7 @@ class TableStore(spark: SparkSession, root: String,
 
   /** The live generations: the newest full one plus every later delta,
     * minus the ones a fold supersedes. */
-  private def liveGenerations(table: String): Seq[(Long, String, Path)] = {
+  private def liveGenerations(table: String): Seq[Gen] = {
     val gens = TableStore.dropFoldCovered(generations(table))
     val lastFull = gens.lastIndexWhere(g => isFullKind(g._2))
     if (lastFull >= 0) gens.drop(lastFull) else gens
@@ -269,53 +268,66 @@ class TableStore(spark: SparkSession, root: String,
     * not be read). Only merges INSIDE the chain apply — which is what
     * makes [[readAt]] time travel exact for free.
     *
-    * The only reader of committed parquet: each generation's directory
-    * is read at most once (its one schema-inference job), and every
-    * narrower read of it takes that schema — no inference job, and
-    * `col=value/` partition columns keep the whole generation's types.
-    * A generation whose every file was rewritten away is never read. */
-  private final class Chain(val gens: Seq[(Long, String, Path)]) {
+    * The only reader of committed parquet: every generation is read one
+    * way ([[readParquet]]) with the schema in its `_schema.json` — no
+    * inference job, and `col=value/` columns keep the writer's types. A
+    * generation whose every file was rewritten away is never read. */
+  private final class Chain(val gens: Seq[Gen]) {
     private val replaced: Map[String, Set[String]] =
       gens.filter(_._2 == TableStore.mergeKind).flatMap(g => readReplaces(g._3))
         .groupMapReduce(_._1)(_._2)(_ ++ _)
 
-    def gone(g: (Long, String, Path)): Set[String] =
-      replaced.getOrElse(g._3.getName, Set.empty)
+    def gone(g: Gen): Set[String] = replaced.getOrElse(g._3.getName, Set.empty)
 
-    private def liveFiles(g: (Long, String, Path)): Seq[String] =
-      listDataFiles(g._3).filterNot(gone(g)).sorted
+    private def liveFiles(g: Gen): Seq[String] = listDataFiles(g._3).filterNot(gone(g)).sorted
 
-    private val dirReads = scala.collection.mutable.Map.empty[Path, DataFrame]
-    private def dirRead(g: (Long, String, Path)): DataFrame =
-      dirReads.getOrElseUpdate(g._3, spark.read.parquet(g._3.toString))
+    private lazy val schemas: Map[Path, StructType] =
+      gens.map(g => g._3 -> readSchema(g._3)).toMap
 
-    /** Generation-relative `files` of `g` under its basePath, with `g`'s
-      * schema; None for no files. */
-    def readFiles(g: (Long, String, Path), files: Iterable[String]): Option[DataFrame] =
-      if (files.isEmpty) None
-      else Some(spark.read.schema(dirRead(g).schema).option("basePath", g._3.toString)
-        .parquet(files.toSeq.sorted.map(f => new Path(g._3, f).toString): _*))
+    /** What survives of `g`: None (its whole directory) when nothing in
+      * it was tombstoned, its live files otherwise. */
+    def survivors(g: Gen): Option[Seq[String]] =
+      if (gone(g).isEmpty) None else Some(liveFiles(g))
 
-    /** Each generation's surviving rows, by data dir: the directory read
-      * when nothing in it was tombstoned, its live files otherwise. */
-    lazy val parts: Map[Path, DataFrame] = gens.flatMap { g =>
-      (if (gone(g).isEmpty) Some(dirRead(g)) else readFiles(g, liveFiles(g)))
-        .map(g._3 -> _)
-    }.toMap
+    /** `g`'s rows with its recorded schema: the generation-relative
+      * `files`, or its whole directory for None; None for no files. */
+    def read(g: Gen, files: Option[Iterable[String]]): Option[DataFrame] = {
+      val paths = files.fold(Seq(g._3.toString))(
+        _.toSeq.sorted.map(f => new Path(g._3, f).toString))
+      if (paths.isEmpty) None else Some(readParquet(g._3, schemas(g._3), paths))
+    }
+
+    /** The recorded schemas of the generations that still hold files. */
+    def liveSchemas: Seq[StructType] =
+      gens.filter(g => survivors(g).forall(_.nonEmpty)).map(g => schemas(g._3))
 
     /** The chain's rows. The last generation can never be tombstoned by
-      * anything inside the chain, so the parts are non-empty whenever
-      * `gens` is. Schema evolution: a generation written before a column
-      * existed reads as null for that column (old and new generations
-      * stay jointly readable; consumers of evolved columns coalesce
-      * defaults). */
-    lazy val table: DataFrame = gens.flatMap(g => parts.get(g._3))
+      * anything inside the chain, so some generation is read whenever
+      * `gens` is non-empty. Schema evolution: a generation written
+      * before a column existed reads as null for that column (old and
+      * new generations stay jointly readable; consumers of evolved
+      * columns coalesce defaults). */
+    lazy val table: DataFrame = gens.flatMap(g => read(g, survivors(g)))
       .reduce(_.unionByName(_, allowMissingColumns = true))
 
     /** The chain's data files as absolute paths, in generation order. */
     def files: Seq[String] =
       gens.flatMap(g => liveFiles(g).map(f => new Path(g._3, f).toString))
   }
+
+  /** THE read of a generation's parquet, committed or staged: `paths`
+    * (its directory, or some of its files) under `gen` as basePath,
+    * with `schema` — the one `_schema.json` records. */
+  private def readParquet(gen: Path, schema: StructType, paths: Seq[String]): DataFrame =
+    spark.read.schema(schema).option("basePath", gen.toString).parquet(paths: _*)
+
+  /** A generation's `_schema.json`. Like the tombstone list it is
+    * correctness, not an optimization: a read never falls back to
+    * inferring the schema, so a missing or unreadable one fails it. */
+  private def readSchema(gen: Path): StructType =
+    try DataType.fromJson(readText(gen, TableStore.schemaFile)).asInstanceOf[StructType]
+    catch { case scala.util.control.NonFatal(e) => throw new IllegalStateException(
+      s"generation $gen has no readable ${TableStore.schemaFile}", e) }
 
   /** Current table contents, or None if never written. */
   def read(table: String): Option[DataFrame] = {
@@ -440,8 +452,7 @@ class TableStore(spark: SparkSession, root: String,
   /** The delta generations between the checkpoint and `untilSeq`, after
     * the change-feed protocol checks (vacuum gap, overwrite). None =
     * table never written; empty = no changes. */
-  private def changeDeltas(table: String, sinceSeq: Long,
-                           untilSeq: Long): Option[Seq[(Long, String, Path)]] = {
+  private def changeDeltas(table: String, sinceSeq: Long, untilSeq: Long): Option[Seq[Gen]] = {
     val all0 = generations(table)
     if (all0.isEmpty) return None
     val all = all0.filter(_._1 <= untilSeq)
@@ -513,16 +524,16 @@ class TableStore(spark: SparkSession, root: String,
     if (gens.isEmpty) None else Some(readWhere(new Chain(gens), predicate))
   }
 
-  /** True iff `column` exists in the parquet schema of EVERY live
+  /** True iff `column` exists in the recorded schema of EVERY live
     * generation of `table` that still holds rows (false for an absent
-    * table). Footer-only — no data rows are read. The soundness gate for
+    * table). Reads only the `_schema.json`s — no parquet. The soundness gate for
     * physical pruning on an EVOLVED column: old generations read the
     * column as null via unionByName, so a `col IN (...)` scan predicate
     * would silently drop every pre-evolution row; callers must fall
     * back to an unpruned read when this is false. */
   def columnInAllGenerations(table: String, column: String): Boolean = {
     val chain = new Chain(liveGenerations(table))
-    chain.gens.nonEmpty && chain.parts.values.forall(_.schema.fieldNames.contains(column))
+    chain.gens.nonEmpty && chain.liveSchemas.forall(_.fieldNames.contains(column))
   }
 
   /** THE pruning decision of every predicate read ([[scan]],
@@ -557,12 +568,8 @@ class TableStore(spark: SparkSession, root: String,
     * predicate then filters whatever was read. */
   private def readWhere(chain: Chain, predicate: Column): DataFrame = {
     val full = chain.table.filter(predicate)
-    val parts = prunePlan(chain, full).flatMap { p =>
-      p.kept match {
-        case Some(files) if files.size < p.listed => chain.readFiles(p.gen, files)
-        case _ => chain.parts.get(p.gen._3)
-      }
-    }
+    val parts = prunePlan(chain, full).flatMap(p =>
+      chain.read(p.gen, p.kept.filter(_.size < p.listed).orElse(chain.survivors(p.gen))))
     // Anchor the union on the FULL schema (zero rows): if every
     // generation carrying a predicate column was pruned and only
     // stats-less generations lacking it remain, the kept parts alone
@@ -584,9 +591,9 @@ class TableStore(spark: SparkSession, root: String,
     * data. */
   def probeExists(table: String, predicate: Column): Boolean = {
     val chain = new Chain(liveGenerations(table))
+    lazy val names = chain.liveSchemas.flatMap(_.fieldNames).toSet
     chain.gens.nonEmpty &&
-      org.apache.spark.sql.GraftExpressionBridge.columnNames(predicate)
-        .forall(chain.table.schema.fieldNames.contains) &&
+      org.apache.spark.sql.GraftExpressionBridge.columnNames(predicate).forall(names) &&
       !readWhere(chain, predicate).isEmpty
   }
 
@@ -604,17 +611,22 @@ class TableStore(spark: SparkSession, root: String,
   /** A generation's zone-map or Bloom sidecar, parsed. Stats are an
     * optimization: absent or unreadable reads as None (no stats,
     * must-read). */
-  private def readSidecar[A](gen: Path, name: String)(parse: String => A): Option[A] = {
-    val p = new Path(gen, name)
-    val f = fs(p)
-    try if (f.exists(p)) Some(parse(readText(f, p))) else None
+  private def readSidecar[A](gen: Path, name: String)(parse: String => A): Option[A] =
+    try Some(parse(readText(gen, name)))
     catch { case scala.util.control.NonFatal(_) => None }
+
+  /** A file of a generation's dir as text; FileNotFoundException if absent. */
+  private def readText(gen: Path, name: String): String = {
+    val p = new Path(gen, name)
+    val in = fs(p).open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
 
-  private def readText(f: FileSystem, p: Path): String = {
-    val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+  /** Non-recursive: a stage gc reclaimed fails the write, never comes back hollow. */
+  private def writeText(gen: Path, name: String, txt: String): Unit = {
+    val p = new Path(gen, name)
+    val out = fs(p).createFile(p).overwrite(true).build()
+    try out.write(txt.getBytes("UTF-8")) finally out.close()
   }
 
   /** A generation's data files as generation-relative paths (partition
@@ -642,11 +654,9 @@ class TableStore(spark: SparkSession, root: String,
     * genuinely absent file is fine (an insert-only merge replaces
     * nothing); tombstones are staged before the pointer publishes the
     * generation, so absent never means lost. */
-  private def readReplaces(gen: Path): Map[String, Set[String]] = {
-    val p = new Path(gen, TableStore.replacesFile)
-    val f = fs(p)
-    if (!f.exists(p)) Map.empty else TableStore.parseReplaces(readText(f, p))
-  }
+  private def readReplaces(gen: Path): Map[String, Set[String]] =
+    try TableStore.parseReplaces(readText(gen, TableStore.replacesFile))
+    catch { case _: java.io.FileNotFoundException => Map.empty }
 
   /** Compute and stage a generation's stats — zone map AND (when the
     * table has `bloomColumns`) the Bloom sidecar — in ONE aggregation
@@ -659,13 +669,15 @@ class TableStore(spark: SparkSession, root: String,
     * which readers treat as must-read — never a commit failure. A
     * successful pass deletes the empty part file Spark's task 0 leaves,
     * unless every file is empty (one must carry the schema). */
-  private def writeStats(table: String, tmp: Path, f: FileSystem): Unit =
+  private def writeStats(table: String, tmp: Path, schema: StructType,
+                         f: FileSystem): Unit =
     try {
-      // reading the "_data-" dir warns ("all paths were ignored") but
-      // resolves — explicit root paths bypass the hidden-path filter;
-      // the directory read (not a part-file list) matters: it's what
-      // resolves `col=value/` partition columns into the stats
-      val df = spark.read.parquet(tmp.toString)
+      // the staged dir read with the schema `_schema.json` records, as
+      // every later read of it is: `col=value/` partition columns enter
+      // the stats at the writer's types. Reading the "_data-" dir warns
+      // ("all paths were ignored") but resolves — explicit root paths
+      // bypass the hidden-path filter
+      val df = readParquet(tmp, schema, Seq(tmp.toString))
       val bloomCols = bloomColsFor(table).filter(c =>
         df.schema.fields.exists(fd =>
           fd.name == c && graft.gdl.expr.BloomSidecar.eligibleType(fd.dataType)))
@@ -685,11 +697,9 @@ class TableStore(spark: SparkSession, root: String,
       // lines read as "column absent" = skippable — silently wrong
       // results); a dangling "...tmp" file is invisible to readers
       def stage(name: String, txt: String): Unit = {
-        val staged = new Path(tmp, name + ".tmp")
-        val out = f.create(staged, true)
-        try { out.write(txt.getBytes("UTF-8")) } finally out.close()
-        if (!f.rename(staged, new Path(tmp, name)))
-          f.delete(staged, false)
+        writeText(tmp, name + ".tmp", txt)
+        if (!f.rename(new Path(tmp, name + ".tmp"), new Path(tmp, name)))
+          f.delete(new Path(tmp, name + ".tmp"), false)
       }
       stage(TableStore.zoneMapFile, zoneTxt)
       bloomTxt.foreach(stage(TableStore.bloomFile, _))
@@ -869,7 +879,7 @@ class TableStore(spark: SparkSession, root: String,
   private def affectedRows(chain: Chain,
                            replaces: Map[String, Set[String]]): DataFrame =
     replaces.toSeq.sortBy(_._1).flatMap { case (genName, rels) =>
-      chain.readFiles(chain.gens.find(_._3.getName == genName).get, rels)
+      chain.read(chain.gens.find(_._3.getName == genName).get, Some(rels))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** Compaction: fold the current generations into one full generation
@@ -972,8 +982,7 @@ class TableStore(spark: SparkSession, root: String,
     * (each dragging a per-file stats entry). Target ~one file per
     * [[TableStore.targetFileBytes]] of input, floor 1; coalesce is a
     * narrow dependency — no shuffle, maintenance stays O(bytes read). */
-  private def binPacked(df: DataFrame,
-                        gens: Seq[(Long, String, Path)]): DataFrame = {
+  private def binPacked(df: DataFrame, gens: Seq[Gen]): DataFrame = {
     val bytes = gens.map { g =>
       try fs(g._3).getContentSummary(g._3).getLength
       catch { case scala.util.control.NonFatal(_) => 0L }
@@ -997,17 +1006,15 @@ class TableStore(spark: SparkSession, root: String,
     val cutoff = System.currentTimeMillis() - gcGraceMs
     // a generation's age is its POINTER's mtime — the commit instant
     // (the data dir was staged earlier)
-    def mtimeOf(g: (Long, String, Path)): Long =
-      f.getFileStatus(pointerPath(table, g._1)).getModificationTime
+    def mtimeOf(g: Gen): Long = f.getFileStatus(pointerPath(table, g._1)).getModificationTime
     // a pointer deleted since the listing (a racing gc) is not aged
-    def aged(g: (Long, String, Path)): Boolean =
+    def aged(g: Gen): Boolean =
       try mtimeOf(g) <= cutoff
       catch { case _: java.io.FileNotFoundException => false }
     // Strays: (a) torn pointers a crashed writer left (created but
     // unparseable — cannot happen on a real conditional PUT, handled
     // for the filesystem emulation); (b) staged `_data-` dirs whose
-    // writer died before claiming a slot. Both invisible to readers;
-    // reclaimable once aged.
+    // writer died before claiming a slot. Both invisible to readers.
     val cd = commitsDir(table)
     // one state read per pointer, reused by both sweeps below
     val ptrStates: Seq[(org.apache.hadoop.fs.FileStatus, PointerRead)] =
@@ -1022,8 +1029,9 @@ class TableStore(spark: SparkSession, root: String,
     // non-pointer-shaped). An UNREADABLE pointer may be a committed one
     // behind an IO fault — deleting it would orphan acknowledged rows —
     // so it is left alone no matter how old.
+    val debris = debrisBefore
     ptrStates.foreach { case (s, st) =>
-      if (st == PointerTorn && s.getModificationTime <= cutoff)
+      if (st == PointerTorn && s.getModificationTime <= debris)
         deletePointerQuietly(f, s.getPath)
     }
     // An unreadable pointer may hide a committed generation `gens`
@@ -1040,8 +1048,7 @@ class TableStore(spark: SparkSession, root: String,
       if (f.exists(dir)) f.listStatus(dir)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("_data-"))
         .foreach { s =>
-          if (!referenced(s.getPath.getName) &&
-              s.getModificationTime <= cutoff)
+          if (!referenced(s.getPath.getName) && s.getModificationTime <= debris)
             try f.delete(s.getPath, true)
             catch { case _: java.io.FileNotFoundException => () }
         }
@@ -1050,7 +1057,7 @@ class TableStore(spark: SparkSession, root: String,
     // listing and the stat — already-gone is success, not failure. The
     // pointer goes FIRST (readers listing after never resolve the
     // generation), then the data.
-    def rm(g: (Long, String, Path)): Unit =
+    def rm(g: Gen): Unit =
       try {
         if (mtimeOf(g) <= cutoff) {
           deletePointerQuietly(f, pointerPath(table, g._1))
@@ -1105,18 +1112,16 @@ class TableStore(spark: SparkSession, root: String,
     val writer = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .parquet(staged.toString)
-    // zone map, Bloom sidecar and tombstone list land INSIDE the staged
-    // dir, so one pointer publishes data, stats and replaces together
-    // (the "_"-prefixed names are invisible to parquet directory
-    // reads). The tombstones are written DIRECTLY (no best-effort
-    // swallow): a merge whose replaces cannot be recorded must not
-    // commit at all
-    if (replaces.nonEmpty) {
-      val out = f.create(new Path(staged, TableStore.replacesFile), true)
-      try out.write(TableStore.serializeReplaces(replaces).getBytes("UTF-8"))
-      finally out.close()
-    }
-    writeStats(table, staged, f)
+    // schema, tombstone list, zone map and Bloom sidecar land INSIDE
+    // the staged dir, so one pointer publishes them with the data (the
+    // "_"-prefixed names are invisible to parquet directory reads). The
+    // schema and the tombstones are written DIRECTLY (no best-effort
+    // swallow): a generation whose schema or replaces cannot be
+    // recorded must not commit at all
+    writeText(staged, TableStore.schemaFile, df.schema.json)
+    if (replaces.nonEmpty)
+      writeText(staged, TableStore.replacesFile, TableStore.serializeReplaces(replaces))
+    writeStats(table, staged, df.schema, f)
     var attempts = 0
     // Slot-skip floor. A young torn/unreadable pointer at the natural
     // next slot is NEVER deleted inline: it may be a rival mid-write
@@ -1127,8 +1132,8 @@ class TableStore(spark: SparkSession, root: String,
     // claim the slot AFTER it: seq order alone carries the
     // semantics (deltas commute; a later full/comp supersedes), so a
     // hole in the seq line is benign, and gc reclaims the torn
-    // debris once aged. Only a torn pointer past the gc grace — the
-    // exact condition gc itself uses — is reclaimed in place.
+    // debris once aged. Only a torn pointer that is debris — the exact
+    // condition gc itself uses ([[debrisBefore]]) — is reclaimed in place.
     var seqFloor = 0L
     var won = false
     while (!won) {
@@ -1149,18 +1154,17 @@ class TableStore(spark: SparkSession, root: String,
       // name free (or torn-and-reclaimable) before we retry, or the
       // table wedges on our own debris.
       def pointerIsMine: Boolean =
-        readPointer(f, ptr).exists(_._2 == staged.getName)
+        readPointerState(f, ptr) == PointerOk(kind, staged.getName)
       // Lost the name to an EXISTING pointer that is not ours.
       // Resolve by state: a complete rival is a plain lost race
-      // (recomputed `next` steps past it); a torn pointer aged past
-      // the gc grace is reclaimed exactly as gc would; anything
-      // younger or unreadable is left untouched and the slot is
-      // stepped over via the floor (see the loop header).
+      // (recomputed `next` steps past it); torn debris is reclaimed
+      // exactly as gc would; anything younger or unreadable is left
+      // untouched and the slot is stepped over via the floor.
       def stepPastBlockedSlot(): Unit =
         readPointerState(f, ptr) match {
           case PointerOk(_, _) => ()
           case PointerGone     => () // vanished (raced gc): slot is free again
-          case PointerTorn if pointerAgedPastGrace(f, ptr) =>
+          case PointerTorn if isDebris(f, ptr) =>
             deletePointerQuietly(f, ptr)
           case _ => seqFloor = next + 1
         }
@@ -1273,15 +1277,19 @@ object TableStore extends org.apache.spark.sql.catalyst.expressions.PredicateHel
     * bytes — the usual lake file-sizing target. */
   private[gdl] val targetFileBytes: Long = 128L << 20
 
+  /** The longest a live writer may take from staging to its pointer. */
+  private val stagingMs: Long = 10L * 60 * 1000
+
   private[gdl] val zoneMapFile = "_zonemap.tsv"
   private[gdl] val bloomFile = "_bloom.tsv"
   private[gdl] val replacesFile = "_replaces.tsv"
+  private[gdl] val schemaFile = "_schema.json"
 
   /** The four observable states of a pointer file. The distinction that
     * matters for safety: [[PointerTorn]] (content read fine but is
     * malformed — a crashed writer's torn write on a filesystem where
     * create, write and close are separate steps) is the
-    * ONLY reclaimable state, and only once aged past the gc grace.
+    * ONLY reclaimable state, and only once it is debris.
     * [[PointerUnreadable]] (the read itself failed after retries)
     * proves nothing — the pointer may be a fully COMMITTED rival whose
     * deletion would orphan acknowledged rows for gc to silently
@@ -1297,11 +1305,13 @@ object TableStore extends org.apache.spark.sql.catalyst.expressions.PredicateHel
     * carries rewritten rows + a tombstone list hiding the originals. */
   private[gdl] val mergeKind = "merge"
 
+  /** A committed generation: (seq, kind, data dir). */
+  private[gdl] type Gen = (Long, String, Path)
+
   /** One generation's part in a predicate read: the live files its
     * sidecars cannot exclude (None = no stats: read the whole
     * generation) and how many live files the sidecars list. */
-  private final case class GenPlan(gen: (Long, String, Path),
-                                   kept: Option[Set[String]], listed: Int)
+  private final case class GenPlan(gen: Gen, kept: Option[Set[String]], listed: Int)
 
   /** A fold generation's kind is `fold<coveredFromSeq>`: the generation
     * at slot S carries EXACTLY the rows of the delta generations
@@ -1316,8 +1326,7 @@ object TableStore extends org.apache.spark.sql.catalyst.expressions.PredicateHel
     * [coveredFrom, foldSeq) of any fold present); the folds themselves
     * stay. What a CURRENT reader should union — historical readers use
     * [[coverSlots]], which can still prefer surviving originals. */
-  private[gdl] def dropFoldCovered(gens: Seq[(Long, String, Path)])
-      : Seq[(Long, String, Path)] = {
+  private[gdl] def dropFoldCovered(gens: Seq[Gen]): Seq[Gen] = {
     val covered = gens.flatMap(g => foldStart(g._2).map(c => (c, g._1)))
     if (covered.isEmpty) gens
     else gens.filter(g =>
@@ -1334,14 +1343,13 @@ object TableStore extends org.apache.spark.sql.catalyst.expressions.PredicateHel
     * range lies BELOW `from` (re-delivering rows the caller already
     * has). Left(slot) = neither the original nor a usable fold
     * survives — that history is gone. */
-  private[gdl] def coverSlots(all: Seq[(Long, String, Path)],
-                              from: Long, to: Long)
-      : Either[Long, Seq[((Long, String, Path), Boolean)]] = {
+  private[gdl] def coverSlots(all: Seq[Gen], from: Long,
+                              to: Long): Either[Long, Seq[(Gen, Boolean)]] = {
     val bySeq = all.map(g => g._1 -> g).toMap
     val foldsByStart = all
       .filter(g => foldStart(g._2).isDefined)
       .groupBy(g => foldStart(g._2).get)
-    val out = Seq.newBuilder[((Long, String, Path), Boolean)]
+    val out = Seq.newBuilder[(Gen, Boolean)]
     var next = from
     while (next <= to) {
       foldsByStart.getOrElse(next, Nil).filter(_._1 <= to)
@@ -1377,7 +1385,7 @@ object TableStore extends org.apache.spark.sql.catalyst.expressions.PredicateHel
     * unique within a table (g%07d-kind), so a path-segment match is
     * exact; a file outside every passed generation is a protocol bug —
     * fail loudly rather than tombstone the wrong file. */
-  private[gdl] def groupByGeneration(gens: Seq[(Long, String, Path)],
+  private[gdl] def groupByGeneration(gens: Seq[Gen],
                                      absFiles: Seq[String]): Map[String, Set[String]] =
     absFiles.map { p =>
       val up = new Path(p).toUri.getPath
@@ -1508,7 +1516,7 @@ object TableStore extends org.apache.spark.sql.catalyst.expressions.PredicateHel
         df.select(input_file_name().as("_f")).distinct()
           .collect().map(r => (r.getString(0), null)).toSeq
       else
-        df.groupBy(input_file_name().as("_f")).agg(aggs.head, aggs.tail: _*)
+        df.groupBy(input_file_name().as("_f")).agg(aggs.head, aggs.tail.toIndexedSeq: _*)
           .collect().map(r => (r.getString(0), r)).toSeq
     def rel(file: String): String = relativize(genRoot, file)
     val zoneTxt = perFile.flatMap { case (file, row) =>
@@ -1777,14 +1785,6 @@ object TableStore extends org.apache.spark.sql.catalyst.expressions.PredicateHel
     }
   }
 
-  private def utf8Cmp(a: String, b: String): Int = {
-    val (x, y) = (a.getBytes("UTF-8"), b.getBytes("UTF-8"))
-    var i = 0
-    while (i < x.length && i < y.length) {
-      val c = java.lang.Integer.compareUnsigned(x(i) & 0xff, y(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    x.length - y.length
-  }
+  private def utf8Cmp(a: String, b: String): Int =
+    java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
 }

@@ -211,7 +211,7 @@ object StacValidator {
 
   private def validateAssets(n: JsonNode): Option[String] = {
     val assets = n.get("assets")
-    val it = assets.fields()
+    val it = assets.properties().iterator()
     while (it.hasNext) {
       val entry = it.next()
       val a = entry.getValue

@@ -232,7 +232,7 @@ object CurationOps {
       val docs = Tables.load(s, d, "documents").select(col("doc_id"))
       val n = docs.count()
       val indexed = docs.orderBy(col("doc_id")).as[Long].rdd
-        .zipWithIndex.toDF("neg_doc_id", "idx")
+        .zipWithIndex().toDF("neg_doc_id", "idx")
       val qs = docs.filter(col("doc_id") % 100 === 0)
         .select(col("doc_id").as("query_id"))
       val cand = qs
@@ -524,7 +524,7 @@ object CurationOps {
           docs => logRegScored(s, d).select(col("doc_id"), col("quality"))
             .join(docs.select(col("doc_id")), Seq("doc_id")))
       val docs = Tables.documentsWithEdges(s, d)
-      val store = SimulatedStore.tableStore(s, d, "q199_card_v2") { st =>
+      val store = SimulatedStore.tableStore(s, d, "q199_card_v3") { st =>
         val card = mk(st)
         card.build(docs.filter(col("doc_id") < 400L))
         card.refreshBatch(docs.filter(col("doc_id") >= 400L), docs,

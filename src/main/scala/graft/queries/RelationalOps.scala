@@ -726,8 +726,8 @@ object RelationalOps {
         .withColumn("o_totalprice",
           when(col("o_orderkey") % 997L === 0L, col("o_totalprice") + 1.0)
             .otherwise(col("o_totalprice")))
-      val l = a.select(a.columns.map(c => col(c).as(s"l_$c")): _*)
-      val r = b.select(b.columns.map(c => col(c).as(s"r_$c")): _*)
+      val l = a.select(a.columns.toSeq.map(c => col(c).as(s"l_$c")): _*)
+      val r = b.select(b.columns.toSeq.map(c => col(c).as(s"r_$c")): _*)
       l.join(r, col("l_o_orderkey") === col("r_o_orderkey"), "full_outer")
         .select(
           coalesce(col("l_o_orderkey"), col("r_o_orderkey")).as("o_orderkey"),

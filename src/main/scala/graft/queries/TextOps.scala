@@ -438,7 +438,7 @@ object TextOps {
       // batch's own 100 docs, merge touched clusters. The corpus is
       // never re-signed and never self-joined here.
       val idx = {
-        val store = SimulatedStore.tableStore(s, d, "q127_idx_v3") { st =>
+        val store = SimulatedStore.tableStore(s, d, "q127_idx_v4") { st =>
           val i = new graft.operators.NearDupIndex(st, "dup")
           val corpus = Tables.documentsWithEdges(s, d)
             .filter(col("doc_id") >= 100L)
@@ -830,7 +830,7 @@ object TextOps {
         col("doc_id") * 1000000L + col("sent_idx") +
           coalesce(expr("assert_true(sent_idx < 1000000)").cast("long"),
             lit(0L)))
-      val store = SimulatedStore.tableStore(s, d, "q189_sentidx_v3") { st =>
+      val store = SimulatedStore.tableStore(s, d, "q189_sentidx_v4") { st =>
         new graft.operators.SentenceIndex(st, "sd").build(
           packed(sentenceRows(s, d).filter(col("doc_id") < 400L)))
       }
@@ -854,7 +854,7 @@ object TextOps {
         col("doc_id") * 1000000L + col("sent_idx") +
           coalesce(expr("assert_true(sent_idx < 1000000)").cast("long"),
             lit(0L)))
-      val store = SimulatedStore.tableStore(s, d, "q195_spanidx_v2") { st =>
+      val store = SimulatedStore.tableStore(s, d, "q195_spanidx_v3") { st =>
         new graft.operators.SpanIndex(st, "sd").build(
           packed(sentenceRows(s, d).filter(col("doc_id") < 400L)))
       }
@@ -1076,7 +1076,7 @@ object TextOps {
     * regression still breaks oracles. */
   private[queries] def storedBpe8(
       s: SparkSession, d: String): graft.operators.ModelStore.BpeModel = {
-    val store = SimulatedStore.tableStore(s, d, "q220_bpe8_v2") { st =>
+    val store = SimulatedStore.tableStore(s, d, "q220_bpe8_v3") { st =>
       graft.operators.ModelStore.exportBpe(st, "bpe8",
         graft.operators.Bpe.trainByteMerges(
           Tables.load(s, d, "documents"), "text", nMerges = 8))
@@ -1093,7 +1093,7 @@ object TextOps {
   private def storedLangIdModel(
       s: SparkSession, d: String): graft.operators.ModelStore.LangIdModel = {
     val langs = langMarkers.map(_._1)
-    val store = SimulatedStore.tableStore(s, d, "q221_langid_v2") { st =>
+    val store = SimulatedStore.tableStore(s, d, "q221_langid_v3") { st =>
       graft.operators.ModelStore.exportLangId(st, "langid", langs,
         graft.operators.LangId.train(Tables.load(s, d, "documents"),
           "doc_id", "text", "lang", langs),
@@ -1113,7 +1113,7 @@ object TextOps {
     * (shingleN, k, bands, threshold) defaults as the inline
     * q183–q185 chain, which is what makes the shared oracles exact. */
   private def storedClusterLabels(s: SparkSession, d: String): DataFrame = {
-    val store = SimulatedStore.tableStore(s, d, "q196_dupidx_v2") { st =>
+    val store = SimulatedStore.tableStore(s, d, "q196_dupidx_v3") { st =>
       val i = new graft.operators.NearDupIndex(st, "dup")
       val corpus = Tables.documentsWithEdges(s, d)
       i.build(corpus, "doc_id", "text")

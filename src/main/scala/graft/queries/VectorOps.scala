@@ -366,7 +366,7 @@ object VectorOps {
     // oracle re-derives everything from the naive member-level pair
     // graph, so the quotient-collapse path is value-pinned on exactly
     // the edge rows the synthetic corpus never contains.
-    "q147_embedding_edge_clusters" -> ((s, d) =>
+    "q147_embedding_edge_clusters" -> ((s, _) =>
       graft.operators.Dedup.embeddingDupClusters(
           Tables.meanZeroVecs(s).select(col("id"), col("embedding")),
           threshold = 0.3, nPlanes = 8, dim = 64)

@@ -580,7 +580,7 @@ class ImporterSpec extends AnyFunSuite {
   test("transient IO failure retries in-task and succeeds (O-taxonomy)") {
     FlakyReader.opens.clear()
     val root = java.nio.file.Files.createTempDirectory("imp-retry").toString
-    val imp = new Importer(TestSpark.spark, root)
+    val imp = new Importer(root)
     val reader = new FlakyReader(Map("mem://a" -> "payload".getBytes), failN = 1)
     val rows = imp.importAssets(assetsOf("mem://a"), reader, "t-d1")
       .collect()
@@ -595,7 +595,7 @@ class ImporterSpec extends AnyFunSuite {
 
   test("exhausted transient retries report TemporaryFailure, not Permanent") {
     FlakyReader.opens.clear()
-    val imp = new Importer(TestSpark.spark,
+    val imp = new Importer(
       java.nio.file.Files.createTempDirectory("imp-tmp").toString)
     val reader = new FlakyReader(Map("mem://b" -> "x".getBytes), failN = 99)
     val rows = imp.importAssets(assetsOf("mem://b"), reader, "t-d1",
@@ -606,7 +606,7 @@ class ImporterSpec extends AnyFunSuite {
 
   test("deterministic failure is Permanent on the FIRST attempt") {
     FlakyReader.opens.clear()
-    val imp = new Importer(TestSpark.spark,
+    val imp = new Importer(
       java.nio.file.Files.createTempDirectory("imp-perm").toString)
     val reader = new FlakyReader(Map.empty, failN = 0) // not-found always
     val rows = imp.importAssets(assetsOf("mem://missing"), reader, "t-d1")
@@ -628,7 +628,7 @@ class ImporterSpec extends AnyFunSuite {
         () => new java.nio.file.AccessDeniedException("mem://c"): Exception,
         () => new java.io.IOException("checksum mismatch"))) {
       val root = java.nio.file.Files.createTempDirectory("imp-det").toString
-      val imp = new Importer(TestSpark.spark, root)
+      val imp = new Importer(root)
       val rows = imp.importAssets(assetsOf("mem://c"), new Throwing(mk),
         "t-d1").collect()
       assert(rows.head.result_code == "PermanentFailure", rows.head.result_string)
@@ -651,7 +651,7 @@ class ImporterSpec extends AnyFunSuite {
       override def exists(url: String) = docs.contains(url)
     }
     val root = java.nio.file.Files.createTempDirectory("imp-msg").toString
-    val imp = new Importer(TestSpark.spark, root)
+    val imp = new Importer(root)
     val rows = imp.importAssets(assetsOf("mem://d"),
       new MsgFlaky(Map("mem://d" -> "ok".getBytes)), "t-d1").collect()
     assert(rows.head.result_code == "Succeeded", rows.head.result_string)
@@ -668,7 +668,7 @@ class ImporterSpec extends AnyFunSuite {
     val manifest = Seq(
       ProcessingAssetRow("d1", "v1", "METADATA", 0L, "s3://b/dir/item.json", None),
       ProcessingAssetRow("d1", "v1", "DATA", 1L, "s3://b/dir/raw.json", Some("x"))).toDS()
-    val rows = new Importer(spark, root).importAssets(manifest, reader, "t-d1")
+    val rows = new Importer(root).importAssets(manifest, reader, "t-d1")
       .collect()
     assert(rows.map(r => (r.asset_type, r.result_code)).toSet ==
       Set(("METADATA", "Succeeded"), ("DATA", "Succeeded")))
@@ -679,7 +679,7 @@ class ImporterSpec extends AnyFunSuite {
   }
 
   test("metadata href rewrite to basenames") {
-    val imp = new Importer(TestSpark.spark, "/tmp/unused")
+    val imp = new Importer("/tmp/unused")
     val in = """{"assets":{"a":{"href":"s3://b/dir/f.tif","file:checksum":"x"}},
                  "links":[{"href":"s3://b/dir/cat.json","rel":"root"}]}"""
     val out = imp.rewriteMetadata(in)

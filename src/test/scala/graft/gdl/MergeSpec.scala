@@ -2,7 +2,6 @@ package graft.gdl
 
 import graft.TestSpark
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Row-level MERGE/DELETE as copy-on-write file rewrite: only files

@@ -20,15 +20,18 @@ import org.scalatest.funsuite.AnyFunSuite
   *    decision the scan made, not a separate estimate;
   *  - every live file of a generation with stats holds a row: its zone
   *    map lists it.
-  * Partition values stay ASCII: they become directory names, which a
-  * JVM started without a UTF-8 `sun.jnu.encoding` cannot create. */
+  * Partition values include numeric-looking ones ("007", "10"): a
+  * generation holding only those must still read `p` as the writer's
+  * string. Partition values stay ASCII: they become directory names,
+  * which a JVM started without a UTF-8 `sun.jnu.encoding` cannot
+  * create. */
 class ScanPruningSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private val strings = Seq("a", "ab", "b", "z", "é", "ß", "ü", "Ā", "ḃ",
     "日本", "ÿ", "á")
-  private val partValues = Seq("pa", "pb", "pc")
+  private val partValues = Seq("pa", "pb", "pc", "007", "10")
 
   private type Row4 = (Long, Option[String], String, Option[Long])
 
@@ -156,7 +159,7 @@ class ScanPruningSpec extends AnyFunSuite {
   }
 
   private def bag(df: DataFrame): Map[List[Any], Int] =
-    df.select(df.columns.sorted.map(col): _*).collect()
+    df.select(df.columns.sorted.toSeq.map(col): _*).collect()
       .map(_.toSeq.toList).groupBy(identity).map { case (r, rs) => r -> rs.length }
 
   private val genFile = "(.*/_data-[^/]+)/(.+)".r

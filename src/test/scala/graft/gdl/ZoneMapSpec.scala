@@ -2,6 +2,7 @@ package graft.gdl
 
 import graft.TestSpark
 import org.apache.hadoop.fs.Path
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -209,6 +210,42 @@ class ZoneMapSpec extends AnyFunSuite {
     val expected = full.filter(hit).as[(String, String)].collect().toSeq
     assert(expected == Seq(("r1", "007")))
     assert(got.as[(String, String)].collect().toSeq == expected)
+  }
+
+  test("partition types are the writer's in every generation") {
+    val root = java.nio.file.Files.createTempDirectory("zonemap-drift").toString
+    val store = new TableStore(spark, root, partitioning = Map("t" -> Seq("p")))
+    store.append("t", Seq(("r1", "007")).toDF("id", "p"))
+    store.append("t", Seq(("r2", "a")).toDF("id", "p"))
+    // the first generation's only dir is p=007: inferred from its name
+    // alone, p would read as a number and the union would cast "a" to it
+    val full = store.read("t").get
+    assert(full.schema("p").dataType == org.apache.spark.sql.types.StringType)
+    assert(full.as[(String, String)].collect().toSet == Set(("r1", "007"), ("r2", "a")))
+    val first = store.readAt("t", store.history("t").head._1).get
+    assert(first.as[(String, String)].collect().toSeq == Seq(("r1", "007")))
+  }
+
+  test("building a read or a schema check launches no Spark job") {
+    val store = freshStore()
+    (0 until 3).foreach(i => store.append("t", Seq((i.toLong, s"v$i")).toDF("id", "s")))
+    val sc = spark.sparkContext
+    val (df, readJobs) = JobCount(sc)(store.read("t").get)
+    val (hasS, checkJobs) = JobCount(sc)(store.columnInAllGenerations("t", "s"))
+    assert(readJobs == 0 && checkJobs == 0, s"read $readJobs jobs, check $checkJobs")
+    assert(hasS && !store.columnInAllGenerations("t", "nope"))
+    assert(rows(df) == Set((0L, "v0"), (1L, "v1"), (2L, "v2")))
+  }
+
+  test("a generation without its recorded schema fails the read, naming it") {
+    val root = java.nio.file.Files.createTempDirectory("zonemap-noschema").toString
+    val store = new TableStore(spark, root, partitioning = Map.empty)
+    store.append("t", Seq((1L, "a")).toDF("id", "s"))
+    val gen = StoreFiles.generation(root, "t", 0).data
+    val schema = new Path(gen, TableStore.schemaFile)
+    assert(schema.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(schema, false))
+    val e = intercept[IllegalStateException](store.read("t"))
+    assert(e.getMessage.contains(gen.getName) && e.getMessage.contains(TableStore.schemaFile))
   }
 
   test("clustering rewrite turns an unskippable probe into O(matching files)") {

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.TestSpark
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit coverage for the perceptual-hash image family: hand-computed

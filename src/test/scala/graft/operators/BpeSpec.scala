@@ -86,7 +86,6 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("token-id streams decode losslessly back to the document text") {
-    import org.apache.spark.sql.functions._
     val docs = Seq(
       (1L, "héllo wörld — café héllo again"),
       (2L, "the cat sat on the mat, the cat sat"),

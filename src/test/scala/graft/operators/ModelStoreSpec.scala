@@ -47,7 +47,6 @@ class ModelStoreSpec extends AnyFunSuite {
   }
 
   test("BPE load refuses a tampered rows table") {
-    import spark.implicits._
     val store = freshStore("bpe_tamper")
     ModelStore.exportBpe(store, "m",
       Bpe.trainByteMerges(corpus(), "text", nMerges = 4))
@@ -87,7 +86,6 @@ class ModelStoreSpec extends AnyFunSuite {
   }
 
   test("langid load refuses tampered weights and truncated rows") {
-    import spark.implicits._
     val langs = Seq("en", "es")
     val store = freshStore("langid_tamper")
     ModelStore.exportLangId(store, "m", langs,

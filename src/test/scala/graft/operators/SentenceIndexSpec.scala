@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.TestSpark
 import graft.gdl.TableStore
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The min-combine contract: refresh ≡ rebuild, replay is a no-op,

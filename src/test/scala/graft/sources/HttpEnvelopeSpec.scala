@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.TestSpark
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The envelope parse contract: status/headers/content-type/charset

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.TestSpark
 import graft.streaming.EventStream.{SessionUpdate, TimedSessionEvent}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Event-time timeout closure: an idle user's session must flush once

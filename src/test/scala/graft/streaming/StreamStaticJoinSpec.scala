@@ -14,7 +14,6 @@ class StreamStaticJoinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("stream-static broadcast enrichment equals the batch join") {
-    import spark.implicits._
     val stage = java.nio.file.Files.createTempDirectory("enrich-src").toString
     val events = Tables.load(spark, TestSpark.sfDir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"))

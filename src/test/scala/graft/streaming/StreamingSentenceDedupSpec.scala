@@ -3,7 +3,6 @@ package graft.streaming
 import graft.TestSpark
 import graft.gdl.TableStore
 import graft.operators.SentenceIndex
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming ingest-time sentence dedup ≡ the batch first-occurrence
